@@ -132,6 +132,11 @@ def _signature(e: DataFrame):
     return row["n"], row["h"]
 
 
+#: largest node count whose packed pair key ``a * n + b`` (a, b < n) fits
+#: int64: floor(sqrt(2**63 - 1))
+_PACKED_KEY_MAX_IDS = 3_037_000_499
+
+
 def _np_min_labels(u, v):
     """Vectorized min-label propagation with pointer jumping over an edge
     list (int64 numpy arrays): returns (ids, lab) where ``ids`` is the
@@ -148,12 +153,18 @@ def _np_min_labels(u, v):
     # pair once per agreeing band (~4x on the training corpus — 3.1M raw
     # vs ~0.9M unique at 1.2M docs), and every duplicate pays full freight
     # through the argsort + per-pass reduceat below.  ids.size is bounded
-    # by 2x the task budget (~8M) so the packed key fits int64 exactly;
-    # duplicates never change the components (r7 — the 4x4 weak-mode CC
-    # finish was the one non-flat stage of the pipeline decomposition).
-    key = np.unique(a * np.int64(ids.size) + b_)
-    a = key // ids.size
-    b_ = key % ids.size
+    # by 2x the task budget (~8M), so the packed key fits int64 unless the
+    # budget is raised past ~1.5e9 nodes (then the row-wise unique below
+    # takes over); duplicates never change the components (r7 — the 4x4
+    # weak-mode CC finish was the one non-flat stage of the pipeline
+    # decomposition).
+    if ids.size <= _PACKED_KEY_MAX_IDS:
+        key = np.unique(a * np.int64(ids.size) + b_)
+        a = key // ids.size
+        b_ = key % ids.size
+    else:  # the packed key would overflow int64: dedup the pairs as rows
+        pairs = np.unique(np.stack((a, b_), axis=1), axis=0)
+        a, b_ = pairs[:, 0], pairs[:, 1]
     keys = np.concatenate((a, b_))
     others = np.concatenate((b_, a))
     order = np.argsort(keys, kind="stable")

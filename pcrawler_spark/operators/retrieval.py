@@ -40,7 +40,8 @@ def bm25_topk(docs: DataFrame, terms: Sequence[str], k: int = 20,
               id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Top-``k`` docs for a bag-of-terms query; returns
     (id, score_ppm, n_terms_matched), ties broken by ascending id.
-    Two bounded driver actions (corpus N and Σ length — two scalars)."""
+    Two bounded driver actions (corpus N and Σ length — two scalars).
+    An empty corpus gives an empty result with the same schema."""
     toks = docs.select(
         F.col(id_col).alias("_id"),
         F.explode(F.split(F.trim(F.col(text_col)), " ")).alias("tok"),
@@ -48,7 +49,9 @@ def bm25_topk(docs: DataFrame, terms: Sequence[str], k: int = 20,
     dl = toks.groupBy("_id").agg(F.count(F.lit(1)).alias("dl"))
     stats = dl.agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("tot")).collect()[0]
     n_docs = int(stats["n"])
-    avgdl = float(stats["tot"]) / float(stats["n"])
+    # an empty corpus has no tokens, so the plan below yields no rows and
+    # avgdl is never applied
+    avgdl = float(stats["tot"]) / float(n_docs) if n_docs else 1.0
 
     qt = toks.where(F.col("tok").isin(*[str(t) for t in terms]))
     idf = (

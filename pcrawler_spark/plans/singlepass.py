@@ -174,7 +174,6 @@ def schedule_decisions(
     hosts: DataFrame,
     epoch_seconds: float = 1e9,
     directory_host: str = "1900.example.vn",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """The bucketed pass's SCHEDULING chain, factored out: classify →
     kind-derived priority → the chain's ONE exchange on ``host`` →
@@ -190,14 +189,9 @@ def schedule_decisions(
         "priority",
         F.when(F.col("kind") == "listing", 0).when(F.col("kind") == "detail", 1).otherwise(2),
     ).withColumn("retry_count", F.lit(0))
-    # no pre-repartition (r7): politeness_decide's pending count is a
-    # partial-agg + broadcast join and its rank window — the only part
-    # needing host clustering — inserts its own exchange over the
-    # over-budget subset only, so on an all-under-budget frontier the
-    # whole scheduling decision runs map-side with ZERO exchanges of the
-    # frontier (was: one full repartition + a full-frontier window sort).
-    # num_partitions kept in the signature for callers that pin widths.
-    del num_partitions
+    # no pre-repartition (r7): politeness_decide's pending-count and rank
+    # windows share ONE exchange of the frontier on host, so an explicit
+    # repartition on host before them only added a second one.
     return politeness_decide(meta, hosts, epoch_seconds=epoch_seconds)
 
 
@@ -207,7 +201,6 @@ def schedule_and_extract_bucketed(
     hosts: DataFrame,
     epoch_seconds: float = 1e9,
     directory_host: str = "1900.example.vn",
-    num_partitions: int | None = None,
     sample_mod: int | None = None,
 ) -> DataFrame:
     """The steady-state pass over a BUCKETED page store
@@ -235,7 +228,6 @@ def schedule_and_extract_bucketed(
     decided = schedule_decisions(
         pages.select("url_hash", "canon_url", "host"), hosts,
         epoch_seconds=epoch_seconds, directory_host=directory_host,
-        num_partitions=num_partitions,
     )
     keys = decided.filter(F.col("decision") == "scheduled").select("url_hash")
     fetched = pages.join(keys.hint("shuffle_hash"), on="url_hash", how="inner")

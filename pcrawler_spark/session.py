@@ -71,6 +71,12 @@ def get_spark(
         # for IO; 8 MB keeps the extract stage many-waves-wide so the last
         # wave tail is short (34 tasks on 32 slots = a 50% tail)
         .config("spark.sql.files.maxPartitionBytes", str(8 * 1024 * 1024))
+        # the generated-class cache (static, default 100 entries) must hold
+        # the engine's working set: a warm-up plus one 200-company crawl and
+        # its export use ~190 distinct classes, so at 100 the LRU cycles and
+        # every crawl recompiles 265-280 classes (3.4-4.3 s of Janino time
+        # in a ~22 s crawl); at 4096 a repeated crawl compiles none
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
     # register at startup (works for local-cluster executors too) and again
     # dynamically for sessions created through a pre-existing context

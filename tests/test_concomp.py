@@ -210,3 +210,20 @@ def test_star_edges_non_divisible_band_config(spark):
         return {r["id"]: r["component"] for r in comp.collect()}
 
     assert comp_map(clique) == comp_map(star)
+
+
+def test_local_finish_unpacked_dedup_matches_packed(monkeypatch):
+    """Past the node count whose packed pair key would overflow int64 the
+    local finish dedups the pairs row-wise, with the same labels."""
+    import numpy as np
+
+    from pcrawler_spark.operators import concomp
+
+    rng = np.random.default_rng(5)
+    u = rng.integers(0, 300, 2_000).astype(np.int64) * 7919
+    v = rng.integers(0, 300, 2_000).astype(np.int64) * 7919
+    packed = concomp._np_min_labels(u, v)
+    monkeypatch.setattr(concomp, "_PACKED_KEY_MAX_IDS", 0)
+    unpacked = concomp._np_min_labels(u, v)
+    for want, got in zip(packed, unpacked):
+        np.testing.assert_array_equal(want, got)

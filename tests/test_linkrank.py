@@ -95,6 +95,17 @@ def test_bm25_hand_model(spark):
     assert got[1][0] > got[2][0]                # dense short beats sparse long
 
 
+def test_bm25_empty_corpus(spark):
+    """An empty corpus returns an empty top-k with the documented schema
+    instead of raising on its null length total."""
+    from pcrawler_spark.operators.retrieval import bm25_topk
+
+    out = bm25_topk(spark.createDataFrame([], "doc_id long, text string"), ("spark",))
+    assert out.collect() == []
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema.fields] == [
+        ("doc_id", "bigint"), ("score_ppm", "bigint"), ("n_terms_matched", "bigint")]
+
+
 def test_rrf_fuse_consensus_and_exactness(spark):
     """RRF: a doc ranked by BOTH lists outranks single-list docs that beat
     it in one list; values match the independent formula exactly."""

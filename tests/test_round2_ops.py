@@ -282,6 +282,27 @@ def test_epoch_job_discipline(spark, tmp_path, monkeypatch):
     assert calls["collect"] <= 2, calls
 
 
+def test_repeated_crawl_compiles_no_new_code(spark, tmp_path):
+    """The session's generated-class cache holds a crawl's working set: a
+    second identical crawl into a fresh state dir reuses every class the
+    first one compiled (with Spark's default 100 entries the cache cycles
+    and each crawl recompiles its classes)."""
+    cfg = SyntheticCrawlConfig(n_companies=30, n_industries=2, n_hosts=5)
+    corpus, pages, hosts, seeds = _spark_corpus(spark, cfg)
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+    added = []
+    for name in ("first", "second"):
+        before = compiles.getCount()
+        engine = CrawlEngine(
+            spark, pages, hosts,
+            CrawlRunConfig(state_dir=str(tmp_path / name), epoch_seconds=120.0),
+        )
+        assert engine.run(seeds)
+        added.append(compiles.getCount() - before)
+    assert added[1] == 0, f"compiles per crawl (first, second): {added}"
+
+
 def test_salted_rank_equivalence(spark):
     """Two-phase salted politeness rank (host-skew defusal) must produce
     EXACTLY the same decisions as the single-window rank on a skewed

@@ -382,6 +382,49 @@ def test_metrics_lineage_table(spark, tmp_path):
     assert {x["r"] for x in got} == {None, "3"}
 
 
+def test_concurrent_epoch_commit_is_atomic(spark, tmp_path):
+    """One table's write failing fails the whole epoch: the call raises only
+    after the other (concurrent) writes finished, commits no manifest, and
+    rollback removes the dirs those writes left."""
+    import pytest as _pytest
+    from pcrawler_spark.plans.catalog import EpochCatalog
+
+    cat = EpochCatalog(spark, str(tmp_path / "cat3"))
+
+    def ok(v):
+        return spark.createDataFrame([(v,)], "v int")
+
+    cat.write_epoch(0, {"a": ok(0), "b": ok(0)})
+    bad = spark.range(3).select(
+        F.when(F.col("id") >= 0, F.raise_error(F.lit("boom"))).cast("int").alias("v"))
+    with _pytest.raises(Exception, match="boom"):
+        cat.write_epoch(1, {"a": ok(1), "b": ok(1), "c": bad, "d": ok(1)})
+    assert not os.path.exists(cat._manifest_path(1))
+    assert cat.last_committed_epoch() == 0
+    assert all(os.path.isdir(cat._epoch_dir(t, 1)) for t in ("a", "b", "d"))
+    cat.rollback_uncommitted()
+    assert not any(os.path.exists(cat._epoch_dir(t, 1)) for t in "abcd")
+    assert [r["v"] for r in cat.read("a").collect()] == [0]
+
+
+def test_concurrent_epoch_writes_carry_callers_job_group(spark, tmp_path):
+    """The writer threads run their jobs under the caller's job group, so
+    per-group accounting still sees every job of the commit."""
+    from pcrawler_spark.plans.catalog import EpochCatalog
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    cat = EpochCatalog(spark, str(tmp_path / "cat4"))
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("epoch-commit-test", "concurrent write_epoch")
+    try:
+        cat.write_epoch(0, {t: spark.createDataFrame([(1,)], "v int") for t in "abc"})
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(tracker.getJobIdsForGroup("epoch-commit-test")) >= 3
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+
+
 def test_engine_metrics_accessor(spark, tmp_path):
     """engine.metrics() exposes the per-epoch counters the run() loop
     committed — the queryable lineage the north rule asks for."""
