@@ -237,6 +237,9 @@ def _apply_step(context: List[Element], step: _Step) -> List[Element]:
         if step.axis == "descendant":
             idx = node.tag_index
             if idx is not None and step.tag != "*":
+                # the root's own index list, not a copy: a step's result is
+                # read-only (predicates build new lists, xpath() copies
+                # before returning), or it corrupts later queries
                 cands = idx.get(step.tag, [])
             else:
                 cands = [el for el in node.iter_descendants()

@@ -15,10 +15,20 @@ a record boundary) parse correctly — the golden test pins that trap.
 
 from __future__ import annotations
 
+import hashlib
+import uuid
 from typing import Iterable, List, Tuple
 
 _CRLF = b"\r\n"
 _BLANK = b"\r\n\r\n"
+
+
+def _record_id(uri: str, date: str, payload: bytes) -> str:
+    """The record's mandatory ``WARC-Record-ID``: a name-based (v5) UUID of
+    its target URI, date and payload digest, so a rebuilt archive is
+    byte-identical and distinct records get distinct IDs."""
+    name = "\n".join((uri, date, hashlib.sha256(payload).hexdigest()))
+    return f"<urn:uuid:{uuid.uuid5(uuid.NAMESPACE_URL, name)}>"
 
 
 def build_warc(records: Iterable[Tuple[str, str, bytes]]) -> bytes:
@@ -30,6 +40,7 @@ def build_warc(records: Iterable[Tuple[str, str, bytes]]) -> bytes:
         header = (
             b"WARC/1.0" + _CRLF
             + b"WARC-Type: response" + _CRLF
+            + b"WARC-Record-ID: " + _record_id(uri, date, payload).encode("ascii") + _CRLF
             + b"WARC-Target-URI: " + uri.encode("utf-8") + _CRLF
             + b"WARC-Date: " + date.encode("ascii") + _CRLF
             + b"Content-Type: text/html" + _CRLF

@@ -38,6 +38,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
 from .simdedup import _h32
 
@@ -58,6 +59,16 @@ def token_budget_mix(df: DataFrame, budgets: dict, id_col: str = "doc_id",
     if n_buckets & (n_buckets - 1) or n_buckets <= 0:
         raise ValueError(f"n_buckets must be a power of two, got {n_buckets}")
     shift = 32 - (n_buckets.bit_length() - 1)
+    # the offsets table and the budget map are string-keyed: any other
+    # stratum type would match no budget and silently keep no rows
+    stype = df.schema[stratum_col].dataType
+    if not isinstance(stype, StringType):
+        raise ValueError(f"stratum column {stratum_col!r} must be a string, "
+                         f"got {stype.simpleString()}")
+    for key in budgets:
+        if not isinstance(key, str):
+            raise ValueError(f"budget key {key!r} ({type(key).__name__}) does not "
+                             f"match string column {stratum_col!r}")
 
     rows = df.select(
         F.col(id_col).alias("id"),

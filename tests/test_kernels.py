@@ -135,6 +135,16 @@ class TestXPathSemantics:
         root = parse_html("<div><div><span>1</span></div><span>2</span></div>")
         assert [n.text_content() for n in xpath(root, "//span")] == ["1", "2"]
 
+    def test_result_is_not_the_tag_index(self):
+        # '//span' is answered from the root's tag index; mutating one
+        # result must not reach the index a later query reads
+        root = parse_html("<div><span>1</span><p><span>2</span></p></div>")
+        first = xpath(root, "//span")
+        first.reverse()
+        first.append(first[0])
+        assert [n.text_content() for n in xpath(root, "//span")] == ["1", "2"]
+        assert [n.text_content() for n in xpath(root, "//p/span")] == ["2"]
+
 
 class TestEmails:
     def test_basic_and_invalid(self):

@@ -103,6 +103,15 @@ def test_non_power_of_two_buckets_rejected(spark):
         token_budget_mix(_docs(spark), BUDGETS, n_buckets=48)
 
 
+def test_non_string_stratum_rejected(spark):
+    # int strata (and int budget keys) used to match no budget: zero rows
+    df = _docs(spark).withColumn("source", F.col("doc_id") % 3)
+    with pytest.raises(ValueError, match=r"'source'.*bigint"):
+        token_budget_mix(df, {0: 300, 1: 300})
+    with pytest.raises(ValueError, match="'source'"):
+        token_budget_mix(_docs(spark), {0: 300})
+
+
 def test_window_partitions_by_bucket_not_stratum_alone(spark):
     """The scale property: the running-sum window must partition on
     (stratum, bucket) — a stratum-only window is one reducer per

@@ -204,7 +204,7 @@ def test_repeated_spans_plan_shape(spark):
     # partial + final HashAggregate pair for the gram count
     assert "partial_count" in plan
     # tokenize/slide/explode are all JVM-side
-    for py in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
+    for py in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "MapInArrow"):
         assert py not in plan
 
 
@@ -230,7 +230,7 @@ def test_pagerank_plan_shape(spark):
     assert "partial_sum" in plan
     # checkpointed lineage: the rank job scans the stored RDD, not parquet
     assert "Scan parquet" not in plan
-    for py in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
+    for py in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "MapInArrow"):
         assert py not in plan
 
 
@@ -244,7 +244,7 @@ def test_redact_pii_plan_is_codegen_only(spark):
     c = spark.read.parquet(f"{SF_DIR}/customer.parquet")
     df = redact_pii(c.select(F.col("c_name").alias("text")))
     plan = plan_of(df)
-    for py in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
+    for py in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "MapInArrow"):
         assert py not in plan
     # formatted mode marks codegen'd nodes with '*' + a codegen id — the
     # whole chain must collapse to one codegen'd Project over the scan
@@ -262,7 +262,7 @@ def test_gopher_signals_plan_shape(spark):
     plan = plan_of(gopher_repetition_signals(d))
     assert "partial_count" in plan
     assert "CartesianProduct" not in plan
-    for py in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
+    for py in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "MapInArrow"):
         assert py not in plan
 
 
@@ -280,5 +280,5 @@ def test_bm25_plan_topk_and_term_filter_first(spark):
     assert "CartesianProduct" not in plan
     # the explode feeds a tok IN (...) filter — present as a Filter cond
     assert plan.count("spark") >= 1 and "tok" in plan
-    for py in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
+    for py in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "MapInArrow"):
         assert py not in plan

@@ -1,5 +1,8 @@
 """WARC kernel + distributed source/sink roundtrip."""
 
+import re
+import uuid
+
 import pytest
 
 
@@ -17,7 +20,14 @@ def test_warc_kernel_roundtrip_and_framing_trap():
         ("https://a.example/4", "2024-01-04T00:00:00Z",
          "xin chào thế giới".encode("utf-8")),
     ]
-    assert parse_warc(build_warc(recs)) == recs
+    blob = build_warc(recs)
+    assert parse_warc(blob) == recs
+    # WARC/1.0 requires a WARC-Record-ID per record: present once in every
+    # header block, unique, and the same when the archive is rebuilt
+    ids = re.findall(rb"\r\nWARC-Record-ID: <urn:uuid:([0-9a-f-]{36})>\r\n", blob)
+    assert len(ids) == len(recs) == len(set(ids))
+    assert all(uuid.UUID(i.decode()).version == 5 for i in ids)
+    assert build_warc(recs) == blob
 
 
 def test_warc_kernel_truncation_fails_loudly():
