@@ -497,21 +497,6 @@ def q42_cosine_near_pairs(spark, sf):
     return cosine_near_pairs(e, threshold=0.38)
 
 
-
-
-def q49_knn_ivf_learned(spark, sf):
-    """ANN over LEARNED k-means cells: spherical Lloyd (assign = max rounded
-    cosine, update = per-dim mean, min-id init, empty cells keep centroids)
-    run as DataFrame ops; the oracle replays the ENTIRE fit in SQL —
-    iteration CTEs generated by _q49_sql — so the learned path is
-    hash-checked end-to-end, not just the probe."""
-    from pcrawler_spark.operators.knn import ivf_topk_learned
-
-    e = _t(spark, sf, "embeddings")
-    return ivf_topk_learned(e, e.filter(F.col("vec_id") < 10),
-                            k=5, n_probe=2, n_cells=8, n_iter=3)
-
-
 def q51_dedup_clusters(spark, sf):
     """Near-dup PAIRS → dedup GROUPS: union of the q26 jaccard pairs and
     q27 minhash-band pairs, clustered with alternating large-star /
@@ -541,12 +526,12 @@ def q53_pq_rerank_topk(spark, sf):
     (ADC-only was ≈0.42 on these near-random synthetic embeddings).  The
     oracle (_q53_sql) replays the ENTIRE sample+fit+encode+ADC+re-rank in
     SQL."""
-    from pcrawler_spark.operators.knn import pq_rerank_topk
+    from pcrawler_spark.operators.knn import pq_topk
 
     e = _t(spark, sf, "embeddings")
-    return pq_rerank_topk(e, e.filter(F.col("vec_id") < 10), dim=64,
-                          k=5, rerank=100, m_sub=16, n_codes=32, n_iter=2,
-                          fit_sample_mod=4)
+    return pq_topk(e, e.filter(F.col("vec_id") < 10), dim=64,
+                   k=5, rerank=100, m_sub=16, n_codes=32, n_iter=2,
+                   fit_sample_mod=4)
 
 
 def q54_ivf_pq_topk(spark, sf):
@@ -1709,8 +1694,8 @@ def _q53_sql(dim: int, m_sub: int, n_codes: int, n_iter: int,
     per-subspace min-id init, n_iter L2 Lloyd iterations, corpus encoding,
     per-query ADC distance tables, exact integer-ppm sums — and, when
     ``rerank`` is set, the exact-cosine re-rank of the ADC top-``rerank``
-    candidates.  Mirrors operators/knn.py
-    pq_fit/pq_encode/pq_topk/pq_rerank_topk decision-for-decision."""
+    candidates.  Mirrors operators/knn.py pq_fit/pq_encode/pq_topk
+    (with ``rerank``) decision-for-decision."""
     parts, prev, l2, sd = _pq_sql_parts(dim, m_sub, n_codes, n_iter,
                                         fit_sample_mod=fit_sample_mod)
     parts += [

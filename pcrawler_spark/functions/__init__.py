@@ -1,9 +1,6 @@
 from .udfs import (
     DETAILS_SCHEMA,
-    canonicalize_url_udf,
     extract_details_udf,
-    extract_emails_udf,
-    extract_links_udf,
     extract_text_udf,
     normalize_phones_udf,
     with_url_hash,
@@ -11,10 +8,7 @@ from .udfs import (
 
 __all__ = [
     "DETAILS_SCHEMA",
-    "canonicalize_url_udf",
     "extract_details_udf",
-    "extract_emails_udf",
-    "extract_links_udf",
     "extract_text_udf",
     "normalize_phones_udf",
     "with_url_hash",

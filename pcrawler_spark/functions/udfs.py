@@ -11,23 +11,13 @@ string (JVM-side, codegen'd) so frontier/seen tables agree everywhere.
 
 from __future__ import annotations
 
-from typing import Iterable, List, Optional
-
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from ..kernels import (
-    canonicalize_url,
-    extract_company_details,
-    extract_company_links,
-    extract_emails,
-    extract_pagination_links,
-    extract_text,
-    split_phones,
-)
+from ..kernels import extract_company_details, extract_text, split_phones
 from ..kernels.details import DETAIL_FIELDS
 
 # Struct returned by the detail extractor (company_name/company_url are
@@ -47,29 +37,9 @@ def extract_details_udf(html: pd.Series) -> pd.DataFrame:
     )
 
 
-@pandas_udf(T.ArrayType(T.StringType()))
-def extract_emails_udf(html: pd.Series, url_type: pd.Series) -> pd.Series:
-    return pd.Series([extract_emails(h, t) for h, t in zip(html, url_type)])
-
-
 @pandas_udf(T.StringType())
 def extract_text_udf(html: pd.Series) -> pd.Series:
     return pd.Series([extract_text(h) for h in html])
-
-
-@pandas_udf(T.ArrayType(T.StringType()))
-def extract_links_udf(html: pd.Series) -> pd.Series:
-    return pd.Series([extract_company_links(h) for h in html])
-
-
-@pandas_udf(T.ArrayType(T.StringType()))
-def extract_pagination_udf(html: pd.Series) -> pd.Series:
-    return pd.Series([extract_pagination_links(h) for h in html])
-
-
-@pandas_udf(T.StringType())
-def canonicalize_url_udf(url: pd.Series) -> pd.Series:
-    return pd.Series([canonicalize_url(u) for u in url])
 
 
 @pandas_udf(T.ArrayType(T.StringType()))
@@ -116,14 +86,12 @@ def canon_url_col(url_col) -> Column:
     return F.when(already_canon, raw).otherwise(slow)
 
 
-def with_url_hash(df: DataFrame, url_col: str = "url", jvm: bool = True) -> DataFrame:
-    """Adds ``canon_url``/``url_hash``/``host`` columns.  Default path is
-    all-JVM (codegen'd canonicalizer + xxhash64 — zero Python in the
-    frontier/scheduling chain); ``jvm=False`` routes through the Python
-    kernel UDF (byte-parity reference path)."""
-    canon = canon_url_col(url_col) if jvm else canonicalize_url_udf(F.col(url_col))
+def with_url_hash(df: DataFrame, url_col: str = "url") -> DataFrame:
+    """Adds ``canon_url``/``url_hash``/``host`` columns, all-JVM (codegen'd
+    canonicalizer + xxhash64 — zero Python in the frontier/scheduling
+    chain)."""
     return (
-        df.withColumn("canon_url", canon)
+        df.withColumn("canon_url", canon_url_col(url_col))
         .withColumn("url_hash", F.xxhash64(F.col("canon_url")))
         .withColumn(
             "host",

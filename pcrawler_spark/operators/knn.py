@@ -1,14 +1,29 @@
 """Similarity search over embedding columns (array<float>).
 
-* brute-force cosine top-k — the exactness baseline: queries × corpus dot
-  products as JVM-side ``zip_with``/``aggregate`` higher-order functions
-  (no UDF), ranked per query.  Cosines are computed in double and rounded
-  before ranking so results are stable across engines.
-* IVF (inverted-file) top-k — the scale path: k-means-style coarse cells
-  (here: per-label centroids, or hash-assigned cells), queries probe only
-  the nearest ``n_probe`` cells.  Cuts the candidate set by the cell fan-in
-  — on a 1000-executor cluster the cell assignment is the shuffle key, so
-  each query touches a few partitions instead of the whole corpus.
+Every top-k search here is one pipeline (Jégou et al., "Product
+Quantization for Nearest Neighbor Search", TPAMI'11): an optional IVF
+probe (each query visits only its ``n_probe`` nearest coarse cells), an
+approximate scan over compressed codes (PQ asymmetric distance tables, or
+8-bit SQ codes), and an optional exact-cosine re-rank of the scan's
+top-``rerank`` candidates.  The public searches are compositions of a few
+private primitives, all JVM-side expressions (no UDF):
+
+* ``_vecs`` — the ``(id, array<double>)`` projection;
+* ``_rank_topk`` — the one per-query ``row_number`` window;
+* ``_probe_cells`` — the IVF centroid probe (broadcast centroids);
+* ``_exact_topk`` — exact rounded cosine with self-exclusion, ranked:
+  brute force, the exact IVF paths and the re-rank stage;
+* ``_adc_table`` / ``_adc_scan`` — per-query (or per-query-and-cell)
+  PQ distance tables and the floor-ppm sum over a document's codes;
+* ``_sq8_adist`` — the floor-ppm distance to decoded SQ8 codes;
+* ``_approx_topk`` — the ADC/SQ8 top-k plus the optional broadcast-
+  candidate re-rank.
+
+Cosines are computed in double and rounded before ranking, approximate
+distances are exact integer-ppm sums, and every ranking breaks ties by
+id — so results are stable across engines (each query has a DuckDB
+oracle that replays it).  Also here: the exact and hyperplane-LSH
+near-duplicate pair finders, k-means / PQ / SQ8 fitting and encoding.
 """
 
 from __future__ import annotations
@@ -32,6 +47,60 @@ def cosine_similarity_col(a, b):
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
+def _vecs(df: DataFrame, id_col: str, vec_col: str, id_as: str = "id",
+          vec_as: str = "v", *extra) -> DataFrame:
+    """``(id_as, vec_as array<double>, *extra)`` projection of ``df``."""
+    return df.select(F.col(id_col).alias(id_as),
+                     F.col(vec_col).cast("array<double>").alias(vec_as), *extra)
+
+
+def _rank_topk(scored: DataFrame, score: str, k: int, ascending: bool = False,
+               tiebreak: str = "neighbor_id") -> DataFrame:
+    """Each query's top ``k`` rows of ``scored`` by ``score``, with a long
+    ``rank`` column; ``tiebreak`` (ascending) makes the order total."""
+    order = F.col(score).asc() if ascending else F.col(score).desc()
+    w = Window.partitionBy("query_id").orderBy(order, F.col(tiebreak).asc())
+    return (scored.withColumn("rank", F.row_number().over(w).cast("long"))
+            .filter(F.col("rank") <= k))
+
+
+def _exact_topk(pairs: DataFrame, k: int, round_dp: int = 6) -> DataFrame:
+    """Exact cosine top-k over candidate pairs (query_id, qv, neighbor_id,
+    cv), self-matches excluded: (query_id, neighbor_id, rank, cos)."""
+    scored = pairs.filter(F.col("query_id") != F.col("neighbor_id")).withColumn(
+        "cos", F.round(cosine_similarity_col(F.col("qv"), F.col("cv")), round_dp))
+    return _rank_topk(scored, "cos", k).select("query_id", "neighbor_id", "rank", "cos")
+
+
+def _probe_cells(q: DataFrame, cents: DataFrame, n_probe: int) -> DataFrame:
+    """Each query's ``n_probe`` nearest cells by rounded centroid cosine
+    (cell-id tiebreak).  The centroid table is tiny and broadcast.
+    Returns the (query_id, qv) rows joined with their (cell, centroid)."""
+    scored = q.crossJoin(F.broadcast(cents)).withColumn(
+        "cell_cos", F.round(cosine_similarity_col("qv", "centroid"), 6))
+    return _rank_topk(scored, "cell_cos", n_probe, tiebreak="cell")
+
+
+def _approx_topk(scored: DataFrame, k: int, rerank: int | None,
+                 corpus: DataFrame, q: DataFrame, id_col: str,
+                 vec_col: str) -> DataFrame:
+    """Top-k of an approximate (query_id, neighbor_id, adist_ppm) scan.
+
+    With ``rerank`` set, the scan's top-``rerank`` candidates get the
+    exact-cosine re-rank stage instead (Jégou et al. TPAMI'11 §V.A): the
+    candidate list is |queries| × rerank rows — tiny vs the corpus — so it
+    is broadcast and the full-vector side is probed in place, never
+    shuffled or rescanned.  Returns (query_id, neighbor_id, rank,
+    adist_ppm), or (query_id, neighbor_id, rank, cos) with ``rerank``."""
+    top = _rank_topk(scored, "adist_ppm", k if rerank is None else rerank, ascending=True)
+    if rerank is None:
+        return top.select("query_id", "neighbor_id", "rank", "adist_ppm")
+    cand = top.select("query_id", "neighbor_id")
+    c = _vecs(corpus, id_col, vec_col, "neighbor_id", "cv")
+    return _exact_topk(
+        c.join(F.broadcast(cand), "neighbor_id").join(F.broadcast(q), "query_id"), k)
+
+
 def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
                      id_col: str = "vec_id", vec_col: str = "embedding",
                      round_dp: int = 6) -> DataFrame:
@@ -40,25 +109,9 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     Self-matches are excluded.  Ranking uses the rounded cosine with
     neighbor-id tiebreak, making the output deterministic and portable.
     """
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    )
-    scored = (
-        q.crossJoin(c)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos", F.round(cosine_similarity_col(F.col("qv"), F.col("cv")), round_dp))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
+    q = _vecs(queries, id_col, vec_col, "query_id", "qv")
+    c = _vecs(corpus, id_col, vec_col, "neighbor_id", "cv")
+    return _exact_topk(q.crossJoin(c), k, round_dp)
 
 
 def cosine_near_pairs(df: DataFrame, threshold: float = 0.9,
@@ -67,7 +120,7 @@ def cosine_near_pairs(df: DataFrame, threshold: float = 0.9,
     """Embedding-cosine near-duplicate pairs — exact baseline (all pairs with
     rounded cosine ≥ threshold).  O(n²): the exactness yardstick for the
     hyperplane-LSH scale path below; at 100 TB run that one instead."""
-    e = df.select(F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v"))
+    e = _vecs(df, id_col, vec_col)
     return (
         e.alias("a").crossJoin(e.alias("b"))
         .filter(F.col("a.id") < F.col("b.id"))
@@ -77,30 +130,10 @@ def cosine_near_pairs(df: DataFrame, threshold: float = 0.9,
     )
 
 
-def _hyperplane_sign(vec, seed: int):
-    """Sign of <v, w_seed> where w_seed[i] = ±1 from the portable md5 hash —
-    deterministic pseudo-random hyperplanes both engines can reproduce.
-    Dimension-agnostic: transform-with-index, no driver-side peeking."""
-    prods = F.transform(
-        vec,
-        lambda x, i: x * F.when(
-            F.conv(
-                F.substring(F.md5(F.concat(F.lit(f"{seed}:"), i.cast("string"))), 1, 8),
-                16, 10,
-            ).cast("long").bitwiseAND(F.lit(1)) == 1,
-            F.lit(1.0),
-        ).otherwise(F.lit(-1.0)),
-    )
-    dot = F.aggregate(prods, F.lit(0.0), lambda a, x: a + x)
-    return F.when(dot > 0, 1).otherwise(0)
-
-
 def _hyperplane_matrix(n_bits: int, dim: int) -> list[list[float]]:
-    """±1 hyperplane weights computed ONCE on the driver from the exact same
-    portable md5 rule :func:`_hyperplane_sign` evaluates per element — same
-    values, so oracles built against the md5 derivation are unchanged.  At
-    real scale this replaces n_bits × dim JVM md5 calls PER VECTOR with a
-    constant literal lookup (the round-2 judge's constant-factor finding)."""
+    """±1 hyperplane weights, computed once on the driver from a portable
+    md5 rule any engine can replay: ``w[s][i]`` is +1 when the first 8 hex
+    digits of ``md5(f"{s}:{i}")`` read as an odd number, else −1."""
     out = []
     for s in range(n_bits):
         row = []
@@ -114,7 +147,7 @@ def _hyperplane_matrix(n_bits: int, dim: int) -> list[list[float]]:
 def hyperplane_lsh_pairs(df: DataFrame, threshold: float = 0.9, n_bits: int = 16,
                          max_hamming: int = 3,
                          id_col: str = "vec_id", vec_col: str = "embedding",
-                         round_dp: int = 6, dim: int | None = None) -> DataFrame:
+                         round_dp: int = 6, *, dim: int) -> DataFrame:
     """Embedding near-dup pairs at scale: random-hyperplane signatures
     (n_bits sign bits) + pigeonhole banding on the signature (any pair with
     ≤ max_hamming differing bits collides on ≥1 block) + exact cosine
@@ -123,40 +156,25 @@ def hyperplane_lsh_pairs(df: DataFrame, threshold: float = 0.9, n_bits: int = 16
     within the Hamming budget (recall measured against
     :func:`cosine_near_pairs` in tests).
 
-    ``dim``: when the embedding dimension is known (the normal case — it is
-    part of the table contract), the ±1 hyperplane matrix is precomputed on
-    the driver and signatures cost one zip_with per bit instead of per-
-    element md5 hashing; vectors of any other length fail loudly.  ``None``
-    keeps the dimension-agnostic md5 path (identical values)."""
+    ``dim`` is the embedding dimension (part of the table contract): the
+    ±1 hyperplane matrix is precomputed on the driver, so a signature bit
+    costs one zip_with; vectors of any other length fail loudly."""
     from .simdedup import simhash_blocks
 
-    e = df.select(F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v"))
-    if dim is not None:
-        e = e.withColumn(
-            "v",
-            F.when(F.size("v") == dim, F.col("v")).otherwise(
-                F.raise_error(F.lit(f"hyperplane_lsh_pairs: expected dim={dim}"))
-            ),
-        )
-        mat = _hyperplane_matrix(n_bits, dim)
-        # ONE py4j call per row (array literal from a Python list), not one
-        # per ELEMENT: the n_bits × dim F.lit storm was the dominant cost
-        # of building this plan (16×64 = 1024 driver round-trips)
-        wcols = [F.lit([float(x) for x in row]) for row in mat]
-
-        def sign_for(s: int):
-            dot = F.aggregate(
-                F.zip_with(F.col("v"), wcols[s], lambda x, w: x * w),
-                F.lit(0.0), lambda a, x: a + x,
-            )
-            return F.when(dot > 0, 1).otherwise(0)
-    else:
-        def sign_for(s: int):
-            return _hyperplane_sign(F.col("v"), s)
-
+    e = _vecs(df, id_col, vec_col)
+    e = e.withColumn(
+        "v",
+        F.when(F.size("v") == dim, F.col("v")).otherwise(
+            F.raise_error(F.lit(f"hyperplane_lsh_pairs: expected dim={dim}"))
+        ),
+    )
+    # ONE py4j call per row (array literal from a Python list), not one
+    # per ELEMENT: the n_bits × dim F.lit storm was the dominant cost
+    # of building this plan (16×64 = 1024 driver round-trips)
     sig = None
-    for s in range(n_bits):
-        bit = sign_for(s).cast("long") * F.lit(1 << s).cast("long")
+    for s, row in enumerate(_hyperplane_matrix(n_bits, dim)):
+        dot = _dot(F.col("v"), F.lit([float(x) for x in row]))
+        bit = F.when(dot > 0, 1).otherwise(0).cast("long") * F.lit(1 << s).cast("long")
         sig = bit if sig is None else (sig + bit)
     e = e.withColumn("sig", sig)
     blocks = F.array(*[
@@ -262,9 +280,7 @@ def kmeans_fit(corpus: DataFrame, n_cells: int = 8, n_iter: int = 3,
 
     Returns a (cell int, centroid array<double>) DataFrame."""
     spark = corpus.sparkSession
-    e = corpus.select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
-    )
+    e = _vecs(corpus, id_col, vec_col)
     if init == "maxmin":
         seed_rows = _maxmin_init(e, n_cells, round_dp)
     else:
@@ -292,6 +308,15 @@ def kmeans_fit(corpus: DataFrame, n_cells: int = 8, n_iter: int = 3,
     return cdf()
 
 
+def _ivf_exact(queries: DataFrame, cents: DataFrame, cells: DataFrame, k: int,
+               n_probe: int, id_col: str, vec_col: str) -> DataFrame:
+    """Exact cosine top-k inside each query's ``n_probe`` nearest cells;
+    ``cells`` holds the corpus as (neighbor_id, cv, cell)."""
+    q = _vecs(queries, id_col, vec_col, "query_id", "qv")
+    probes = _probe_cells(q, cents, n_probe).select("query_id", "qv", "cell")
+    return _exact_topk(probes.join(cells, on="cell"), k)
+
+
 def ivf_topk_learned(corpus: DataFrame, queries: DataFrame, k: int = 5,
                      n_probe: int = 2, n_cells: int = 8, n_iter: int = 3,
                      id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
@@ -300,34 +325,9 @@ def ivf_topk_learned(corpus: DataFrame, queries: DataFrame, k: int = 5,
     shape as :func:`ivf_topk` but the cells come from :func:`kmeans_fit`
     instead of a pre-existing label column."""
     cents = kmeans_fit(corpus, n_cells, n_iter, id_col, vec_col)
-    e = corpus.select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
-    )
-    assigned = assign_cells(e, cents).select(
-        F.col("id").alias("neighbor_id"), F.col("v").alias("cv"), "cell"
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv")
-    )
-    probe_w = Window.partitionBy("query_id").orderBy(F.col("cell_cos").desc(), F.col("cell").asc())
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn("cell_cos", F.round(cosine_similarity_col("qv", "centroid"), 6))
-        .withColumn("cell_rank", F.row_number().over(probe_w))
-        .filter(F.col("cell_rank") <= n_probe)
-        .select("query_id", "qv", "cell")
-    )
-    scored = (
-        probes.join(assigned, on="cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos", F.round(cosine_similarity_col("qv", "cv"), 6))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
+    cells = assign_cells(_vecs(corpus, id_col, vec_col), cents).select(
+        F.col("id").alias("neighbor_id"), F.col("v").alias("cv"), "cell")
+    return _ivf_exact(queries, cents, cells, k, n_probe, id_col, vec_col)
 
 
 def _sq_l2(a, b):
@@ -387,9 +387,7 @@ def pq_fit(corpus: DataFrame, dim: int, m_sub: int = 4, n_codes: int = 8,
         raise ValueError(f"dim={dim} not divisible by m_sub={m_sub}")
     sub_dim = dim // m_sub
     spark = corpus.sparkSession
-    e = corpus.select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
-    )
+    e = _vecs(corpus, id_col, vec_col)
     init_rows = None
     if fit_sample_mod:
         from .simdedup import _h32
@@ -484,11 +482,9 @@ def pq_encode(corpus: DataFrame, codebook: DataFrame, dim: int, m_sub: int,
     at 10^10 vectors this stage touches every vector, so the win scales
     with the corpus.  Identical output (q53/q54/q58 oracles)."""
     sub_dim = dim // m_sub
-    e = corpus.select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
-    )
-    sv = e.select("id", _explode_subvectors(F.col("v"), m_sub, sub_dim).alias("_s")) \
-          .select("id", "_s.sub", "_s.sv")
+    sv = _vecs(corpus, id_col, vec_col).select(
+        "id", _explode_subvectors(F.col("v"), m_sub, sub_dim).alias("_s")
+    ).select("id", "_s.sub", "_s.sv")
     return (
         sv.join(F.broadcast(codebook), "sub")
         .withColumn("_d", F.round(_sq_l2(F.col("sv"), F.col("cvec")), round_dp))
@@ -498,20 +494,33 @@ def pq_encode(corpus: DataFrame, codebook: DataFrame, dim: int, m_sub: int,
     )
 
 
-def _adc_table(q: DataFrame, cb: DataFrame, m_sub: int, sub_dim: int) -> DataFrame:
-    """Per-query ADC lookup table (query_id, sub, code, d_ppm): squared L2
-    from each query subvector to each codebook entry, floored to integer
-    ppm.  m_sub × n_codes rows per query — tiny, always broadcast."""
-    qsv = q.select(
-        "query_id", _explode_subvectors(F.col("qv"), m_sub, sub_dim).alias("_s")
-    ).select("query_id", "_s.sub", "_s.sv")
+def _adc_table(qs: DataFrame, keys: list[str], vec: str, cb: DataFrame,
+               m_sub: int, sub_dim: int) -> DataFrame:
+    """ADC lookup table (*keys, sub, code, d_ppm): squared L2 from each
+    subvector of ``vec`` to each codebook entry, floored to integer ppm.
+    ``keys`` is ``query_id`` (plain ADC) or ``query_id, cell`` (residual
+    ADC, one table per probed cell).  m_sub × n_codes rows per key — tiny,
+    always broadcast."""
+    sv = qs.select(*keys, _explode_subvectors(F.col(vec), m_sub, sub_dim).alias("_s")) \
+           .select(*keys, "_s.sub", "_s.sv")
+    return sv.join(F.broadcast(cb), "sub").select(
+        *keys, "sub", "code",
+        F.floor(F.lit(1_000_000.0) * _sq_l2(F.col("sv"), F.col("cvec")))
+        .cast("long").alias("d_ppm"),
+    )
+
+
+def _adc_scan(enc: DataFrame, dt: DataFrame, keys: list[str]) -> DataFrame:
+    """(query_id, neighbor_id, adist_ppm): the encoded corpus (id, sub,
+    code, …) looks its codes up in the broadcast ADC table ``dt`` on
+    ``keys`` and sums them per (query, doc).  Per-sub distances are
+    floored to integer ppm (the floor-ppm discipline of textstats), so the
+    SUM is an exact long — order-free and bit-identical across engines."""
     return (
-        qsv.join(F.broadcast(cb), "sub")
-        .select(
-            "query_id", "sub", "code",
-            F.floor(F.lit(1_000_000.0) * _sq_l2(F.col("sv"), F.col("cvec")))
-            .cast("long").alias("d_ppm"),
-        )
+        enc.join(F.broadcast(dt), keys)
+        .filter(F.col("query_id") != F.col("id"))
+        .groupBy("query_id", F.col("id").alias("neighbor_id"))
+        .agg(F.sum("d_ppm").alias("adist_ppm"))
     )
 
 
@@ -527,9 +536,9 @@ def ivf_pq_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
     are the ``cell_col`` column (same contract as :func:`ivf_topk`; swap in
     :func:`kmeans_fit` cells for the learned variant).  With ``rerank``
     set, the ADC top-``rerank`` candidates get the exact-cosine re-rank
-    stage (:func:`pq_rerank_topk`'s second stage) — the full FAISS-style
-    IVF→ADC→re-rank composition; the full-vector probe still touches only
-    the broadcast candidate list, never an unprobed cell.
+    stage — the full FAISS-style IVF→ADC→re-rank composition; the
+    full-vector probe still touches only the broadcast candidate list,
+    never an unprobed cell.
 
     Plan: centroids and ADC tables broadcast; the encoded corpus is
     partitioned by cell, so a probe is a partition-pruned join, and the
@@ -537,67 +546,23 @@ def ivf_pq_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
 
     Returns (query_id, neighbor_id, rank, adist_ppm) — or
     (query_id, neighbor_id, rank, cos) when ``rerank`` is set."""
-    sub_dim = dim // m_sub
     cents = ivf_build(corpus, id_col, vec_col, cell_col)
     cb = pq_fit(corpus, dim, m_sub, n_codes, n_iter, id_col, vec_col)
-    enc = pq_encode(corpus, cb, dim, m_sub, id_col, vec_col)
-    encl = enc.join(
-        corpus.select(F.col(id_col).alias("id"), F.col(cell_col).alias("cell")), "id"
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv")
-    )
-    probe_w = Window.partitionBy("query_id").orderBy(
-        F.col("cell_cos").desc(), F.col("cell").asc()
-    )
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn("cell_cos", F.round(cosine_similarity_col("qv", "centroid"), 6))
-        .withColumn("cell_rank", F.row_number().over(probe_w))
-        .filter(F.col("cell_rank") <= n_probe)
-        .select("query_id", "cell")
-    )
-    dt = _adc_table(q, cb, m_sub, sub_dim)
-    scored = (
-        encl.join(F.broadcast(probes), "cell")
-        .filter(F.col("query_id") != F.col("id"))
-        .join(F.broadcast(dt), ["query_id", "sub", "code"])
-        .groupBy("query_id", F.col("id").alias("neighbor_id"))
-        .agg(F.sum("d_ppm").alias("adist_ppm"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adist_ppm").asc(), F.col("neighbor_id").asc()
-    )
-    adc = (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= (k if rerank is None else rerank))
-    )
-    if rerank is None:
-        return adc.select("query_id", "neighbor_id", "rank", "adist_ppm")
-    cand = adc.select("query_id", "neighbor_id")
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    )
-    rescored = (
-        c.join(F.broadcast(cand), "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .withColumn("cos", F.round(cosine_similarity_col("qv", "cv"), 6))
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w2).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
+    enc = pq_encode(corpus, cb, dim, m_sub, id_col, vec_col).join(
+        corpus.select(F.col(id_col).alias("id"), F.col(cell_col).alias("cell")), "id")
+    q = _vecs(queries, id_col, vec_col, "query_id", "qv")
+    probes = _probe_cells(q, cents, n_probe).select("query_id", "cell")
+    dt = _adc_table(q, ["query_id"], "qv", cb, m_sub, dim // m_sub)
+    scored = _adc_scan(enc.join(F.broadcast(probes), "cell"), dt,
+                       ["query_id", "sub", "code"])
+    return _approx_topk(scored, k, rerank, corpus, q, id_col, vec_col)
 
 
 def pq_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
             m_sub: int = 4, n_codes: int = 8, n_iter: int = 2,
             id_col: str = "vec_id", vec_col: str = "embedding",
-            fit_sample_mod: int | None = None) -> DataFrame:
+            fit_sample_mod: int | None = None,
+            rerank: int | None = None) -> DataFrame:
     """ANN by asymmetric distance computation (ADC) over PQ codes: each
     query precomputes an m_sub × n_codes distance table against the
     codebooks (tiny — broadcast), then a document's approximate distance is
@@ -606,35 +571,24 @@ def pq_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
     rescan.  Plan shape at 10^10 vectors: the encoded corpus streams
     map-side against the broadcast table (no shuffle), one partial-agg sum
     per (query, doc), one top-k window.  Combine with the IVF cell filter
-    (:func:`ivf_topk_learned`) to prune candidates before the ADC scan.
+    (:func:`ivf_pq_topk`) to prune candidates before the ADC scan.
 
-    Per-sub distances are floored to integer ppm (the floor-ppm discipline
-    of textstats) so the cross-doc SUM is an exact long — order-free and
-    bit-identical across engines.
+    With ``rerank`` set, the standard exact re-rank stage (Jégou et al.
+    TPAMI'11 §V.A, "re-ranking with source coding"): the ADC scan selects
+    a top-``rerank`` candidate set per query through the codes alone, then
+    exact cosine on FULL vectors ranks the final top-k — recall recovers
+    to ~brute-force while the full-vector scan touches only
+    rerank/|corpus| of the data.
 
-    Returns (query_id, neighbor_id, rank, adist_ppm)."""
-    sub_dim = dim // m_sub
+    Returns (query_id, neighbor_id, rank, adist_ppm) — or
+    (query_id, neighbor_id, rank, cos) when ``rerank`` is set."""
     cb = pq_fit(corpus, dim, m_sub, n_codes, n_iter, id_col, vec_col,
                 fit_sample_mod=fit_sample_mod)
     enc = pq_encode(corpus, cb, dim, m_sub, id_col, vec_col)
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv")
-    )
-    dt = _adc_table(q, cb, m_sub, sub_dim)
-    scored = (
-        enc.join(F.broadcast(dt), ["sub", "code"])
-        .filter(F.col("query_id") != F.col("id"))
-        .groupBy("query_id", F.col("id").alias("neighbor_id"))
-        .agg(F.sum("d_ppm").alias("adist_ppm"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adist_ppm").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "adist_ppm")
-    )
+    q = _vecs(queries, id_col, vec_col, "query_id", "qv")
+    dt = _adc_table(q, ["query_id"], "qv", cb, m_sub, dim // m_sub)
+    scored = _adc_scan(enc, dt, ["sub", "code"])
+    return _approx_topk(scored, k, rerank, corpus, q, id_col, vec_col)
 
 
 def ivf_pq_residual_topk(corpus: DataFrame, queries: DataFrame, dim: int,
@@ -662,13 +616,8 @@ def ivf_pq_residual_topk(corpus: DataFrame, queries: DataFrame, dim: int,
 
     Returns (query_id, neighbor_id, rank, adist_ppm) — or
     (query_id, neighbor_id, rank, cos) when ``rerank`` is set."""
-    sub_dim = dim // m_sub
     cents = ivf_build(corpus, id_col, vec_col, cell_col)
-    e = corpus.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-        F.col(cell_col).alias("cell"),
-    )
+    e = _vecs(corpus, id_col, vec_col, "id", "v", F.col(cell_col).alias("cell"))
     resid = e.join(F.broadcast(cents), "cell").select(
         "id", "cell",
         F.zip_with("v", "centroid", lambda a, b: a - b).alias("rv"),
@@ -681,111 +630,15 @@ def ivf_pq_residual_topk(corpus: DataFrame, queries: DataFrame, dim: int,
     enc = pq_encode(resid, cb, dim, m_sub, id_col="id", vec_col="rv").join(
         resid.select("id", "cell"), "id"
     )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    )
-    probe_w = Window.partitionBy("query_id").orderBy(
-        F.col("cell_cos").desc(), F.col("cell").asc()
-    )
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn("cell_cos", F.round(cosine_similarity_col("qv", "centroid"), 6))
-        .withColumn("cell_rank", F.row_number().over(probe_w))
-        .filter(F.col("cell_rank") <= n_probe)
-        .select(
-            "query_id", "cell",
-            F.zip_with("qv", "centroid", lambda a, b: a - b).alias("qrv"),
-        )
+    q = _vecs(queries, id_col, vec_col, "query_id", "qv")
+    probes = _probe_cells(q, cents, n_probe).select(
+        "query_id", "cell",
+        F.zip_with("qv", "centroid", lambda a, b: a - b).alias("qrv"),
     )
     # per-(query, probed cell) ADC table over the QUERY RESIDUAL
-    qsv = probes.select(
-        "query_id", "cell",
-        _explode_subvectors(F.col("qrv"), m_sub, sub_dim).alias("_s"),
-    ).select("query_id", "cell", "_s.sub", "_s.sv")
-    dt = qsv.join(F.broadcast(cb), "sub").select(
-        "query_id", "cell", "sub", "code",
-        F.floor(F.lit(1_000_000.0) * _sq_l2(F.col("sv"), F.col("cvec")))
-        .cast("long").alias("d_ppm"),
-    )
-    scored = (
-        enc.join(F.broadcast(dt), ["cell", "sub", "code"])
-        .filter(F.col("query_id") != F.col("id"))
-        .groupBy("query_id", F.col("id").alias("neighbor_id"))
-        .agg(F.sum("d_ppm").alias("adist_ppm"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adist_ppm").asc(), F.col("neighbor_id").asc()
-    )
-    adc = (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= (k if rerank is None else rerank))
-    )
-    if rerank is None:
-        return adc.select("query_id", "neighbor_id", "rank", "adist_ppm")
-    cand = adc.select("query_id", "neighbor_id")
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    )
-    rescored = (
-        c.join(F.broadcast(cand), "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .withColumn("cos", F.round(cosine_similarity_col("qv", "cv"), 6))
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w2).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
-
-
-def pq_rerank_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
-                   rerank: int = 50, m_sub: int = 4, n_codes: int = 8,
-                   n_iter: int = 2, id_col: str = "vec_id",
-                   vec_col: str = "embedding",
-                   fit_sample_mod: int | None = None) -> DataFrame:
-    """PQ ANN with the standard exact re-rank stage (Jégou et al. TPAMI'11
-    §V.A: "re-ranking with source coding"): the ADC scan selects a top-
-    ``rerank`` candidate set per query through the compressed codes alone,
-    then exact cosine on FULL vectors ranks the final top-k — recall
-    recovers to ~brute-force while the full-vector scan touches only
-    rerank/|corpus| of the data.
-
-    Scale shape: stage 1 is :func:`pq_topk`'s map-side ADC (corpus touched
-    only via (id, sub, code)); stage 2 joins the rerank×|queries| candidate
-    ids (tiny) back to the corpus — a shuffle-hash join keyed on id whose
-    probe side is the candidate list, never a rescan; queries broadcast.
-
-    Returns (query_id, neighbor_id, rank, cos)."""
-    cand = pq_topk(corpus, queries, dim, k=rerank, m_sub=m_sub,
-                   n_codes=n_codes, n_iter=n_iter, id_col=id_col,
-                   vec_col=vec_col,
-                   fit_sample_mod=fit_sample_mod).select("query_id", "neighbor_id")
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    )
-    # the candidate list is |queries| × rerank rows — tiny vs the corpus, so
-    # broadcast it: the full-vector side is probed in place, never shuffled
-    scored = (
-        c.join(F.broadcast(cand), "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .withColumn("cos", F.round(cosine_similarity_col("qv", "cv"), 6))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
+    dt = _adc_table(probes, ["query_id", "cell"], "qrv", cb, m_sub, dim // m_sub)
+    scored = _adc_scan(enc, dt, ["cell", "sub", "code"])
+    return _approx_topk(scored, k, rerank, corpus, q, id_col, vec_col)
 
 
 def sq8_fit(corpus: DataFrame, id_col: str = "vec_id",
@@ -838,6 +691,17 @@ def sq8_encode(corpus: DataFrame, bounds: DataFrame, id_col: str = "vec_id",
     return corpus.select(F.col(id_col).alias("id"), codes.alias("codes"))
 
 
+def _sq8_adist(vmin, scale):
+    """Floor-ppm squared L2 from the full-precision query ``qv`` to the
+    ``codes`` decoded on the fly (vmin + level × scale, per dimension)."""
+    decoded = F.transform(
+        F.col("codes"),
+        lambda c, i: F.element_at(vmin, i + 1)
+        + c.cast("double") * F.element_at(scale, i + 1),
+    )
+    return F.floor(F.lit(1_000_000.0) * _sq_l2(decoded, F.col("qv"))).cast("long")
+
+
 def sq8_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
              rerank: int | None = None, id_col: str = "vec_id",
              vec_col: str = "embedding") -> DataFrame:
@@ -846,7 +710,7 @@ def sq8_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     distance fold — the stored column is 4× smaller than float32 and 8×
     smaller than this table's float64).  Squared-L2 ranking with the
     floor-ppm integer discipline; optional exact-cosine ``rerank`` stage
-    identical to :func:`pq_rerank_topk`'s.
+    identical to :func:`pq_topk`'s.
 
     Scale shape: per-dim bounds + queries broadcast; the encoded corpus
     streams map-side (no shuffle before the per-query top-k window); for
@@ -857,54 +721,14 @@ def sq8_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     bounds = sq8_fit(corpus, id_col, vec_col)
     vmin, scale = _sq8_bounds_arrays(bounds)
     enc = sq8_encode(corpus, bounds, id_col, vec_col, _arrays=(vmin, scale))
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    )
-    decoded = F.transform(
-        F.col("codes"),
-        lambda c, i: F.element_at(vmin, i + 1)
-        + c.cast("double") * F.element_at(scale, i + 1),
-    )
+    q = _vecs(queries, id_col, vec_col, "query_id", "qv")
     scored = (
         enc.crossJoin(F.broadcast(q))
         .filter(F.col("query_id") != F.col("id"))
-        .withColumn(
-            "adist_ppm",
-            F.floor(F.lit(1_000_000.0) * F.aggregate(
-                F.zip_with(decoded, F.col("qv"), lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0), lambda acc, x: acc + x,
-            )).cast("long"),
-        )
+        .select("query_id", F.col("id").alias("neighbor_id"),
+                _sq8_adist(vmin, scale).alias("adist_ppm"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adist_ppm").asc(), F.col("id").asc()
-    )
-    adc = (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= (k if rerank is None else rerank))
-        .select("query_id", F.col("id").alias("neighbor_id"), "rank", "adist_ppm")
-    )
-    if rerank is None:
-        return adc
-    cand = adc.select("query_id", "neighbor_id")
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    )
-    rescored = (
-        c.join(F.broadcast(cand), "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .withColumn("cos", F.round(cosine_similarity_col("qv", "cv"), 6))
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w2).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
+    return _approx_topk(scored, k, rerank, corpus, q, id_col, vec_col)
 
 
 def ivf_sq8_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
@@ -934,67 +758,17 @@ def ivf_sq8_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     bounds = sq8_fit(corpus, id_col, vec_col)
     vmin, scale = _sq8_bounds_arrays(bounds)
     enc = sq8_encode(corpus, bounds, id_col, vec_col, _arrays=(vmin, scale)).join(
-        corpus.select(F.col(id_col).alias("id"), F.col(cell_col).alias("cell")), "id"
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    )
-    probe_w = Window.partitionBy("query_id").orderBy(
-        F.col("cell_cos").desc(), F.col("cell").asc()
-    )
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn("cell_cos", F.round(cosine_similarity_col("qv", "centroid"), 6))
-        .withColumn("cell_rank", F.row_number().over(probe_w))
-        .filter(F.col("cell_rank") <= n_probe)
-        .select("query_id", "cell")
-    )
-    decoded = F.transform(
-        F.col("codes"),
-        lambda c, i: F.element_at(vmin, i + 1)
-        + c.cast("double") * F.element_at(scale, i + 1),
-    )
+        corpus.select(F.col(id_col).alias("id"), F.col(cell_col).alias("cell")), "id")
+    q = _vecs(queries, id_col, vec_col, "query_id", "qv")
+    probes = _probe_cells(q, cents, n_probe).select("query_id", "cell")
     scored = (
         enc.join(F.broadcast(probes), "cell")
         .join(F.broadcast(q), "query_id")
         .filter(F.col("query_id") != F.col("id"))
-        .withColumn(
-            "adist_ppm",
-            F.floor(F.lit(1_000_000.0) * F.aggregate(
-                F.zip_with(decoded, F.col("qv"), lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0), lambda acc, x: acc + x,
-            )).cast("long"),
-        )
+        .select("query_id", F.col("id").alias("neighbor_id"),
+                _sq8_adist(vmin, scale).alias("adist_ppm"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adist_ppm").asc(), F.col("id").asc()
-    )
-    adc = (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= (k if rerank is None else rerank))
-        .select("query_id", F.col("id").alias("neighbor_id"), "rank", "adist_ppm")
-    )
-    if rerank is None:
-        return adc
-    cand = adc.select("query_id", "neighbor_id")
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    )
-    rescored = (
-        c.join(F.broadcast(cand), "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .withColumn("cos", F.round(cosine_similarity_col("qv", "cv"), 6))
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w2).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
+    return _approx_topk(scored, k, rerank, corpus, q, id_col, vec_col)
 
 
 def ivf_build(corpus: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding",
@@ -1018,31 +792,5 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5, n_probe: int = 2
              cell_col: str = "label") -> DataFrame:
     """ANN: probe the n_probe nearest cells only, exact rank within them."""
     cents = ivf_build(corpus, id_col, vec_col, cell_col)
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    )
-    probe_w = Window.partitionBy("query_id").orderBy(F.col("cell_cos").desc(), F.col("cell").asc())
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn("cell_cos", F.round(cosine_similarity_col("qv", "centroid"), 6))
-        .withColumn("cell_rank", F.row_number().over(probe_w))
-        .filter(F.col("cell_rank") <= n_probe)
-        .select("query_id", "qv", "cell")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-        F.col(cell_col).alias("cell"),
-    )
-    scored = (
-        probes.join(c, on="cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos", F.round(cosine_similarity_col("qv", "cv"), 6))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
+    cells = _vecs(corpus, id_col, vec_col, "neighbor_id", "cv", F.col(cell_col).alias("cell"))
+    return _ivf_exact(queries, cents, cells, k, n_probe, id_col, vec_col)

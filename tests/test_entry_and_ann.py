@@ -63,22 +63,42 @@ def test_hyperplane_lsh_recall_on_near_dups(spark):
         vid += 1
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     exact = {(r.id_a, r.id_b) for r in cosine_near_pairs(df, threshold=0.98).collect()}
-    lsh = {(r.id_a, r.id_b) for r in hyperplane_lsh_pairs(df, threshold=0.98,
-                                                          n_bits=16, max_hamming=4).collect()}
+    lsh = {(r.id_a, r.id_b) for r in hyperplane_lsh_pairs(df, threshold=0.98, n_bits=16,
+                                                          max_hamming=4, dim=16).collect()}
     assert len(exact) >= 20, "clusters must produce true near-dup pairs"
     assert lsh <= exact  # the exact-cosine filter admits no false positives
     recall = len(lsh) / len(exact)
     assert recall >= 0.9, f"recall {recall}: {len(lsh)}/{len(exact)}"
 
 
+def _md5_hyperplane_sign(vec, seed: int):
+    """Reference derivation of one signature bit, evaluated per element in
+    Spark SQL: sign of <v, w_seed> with w_seed[i] = +1 when the first 8 hex
+    digits of md5("seed:i") are odd, else -1 — the portable rule the q43
+    oracle replays."""
+    prods = F.transform(
+        vec,
+        lambda x, i: x * F.when(
+            F.conv(
+                F.substring(F.md5(F.concat(F.lit(f"{seed}:"), i.cast("string"))), 1, 8),
+                16, 10,
+            ).cast("long").bitwiseAND(F.lit(1)) == 1,
+            F.lit(1.0),
+        ).otherwise(F.lit(-1.0)),
+    )
+    dot = F.aggregate(prods, F.lit(0.0), lambda a, x: a + x)
+    return F.when(dot > 0, 1).otherwise(0)
+
+
 def test_hyperplane_precomputed_matrix_matches_md5_path(spark):
-    """The driver-precomputed ±1 matrix (dim=...) must produce EXACTLY the
-    signatures of the per-element md5 derivation — same values, one
-    constant-factor cheaper plan — and reject wrong-dimension vectors."""
+    """The driver-precomputed ±1 matrix must hold EXACTLY the weights of
+    the per-element Spark md5 derivation (so every signature bit agrees
+    with it), and hyperplane_lsh_pairs must reject wrong-dimension
+    vectors."""
     import math
 
     import pytest
-    from pcrawler_spark.operators.knn import hyperplane_lsh_pairs
+    from pcrawler_spark.operators.knn import _hyperplane_matrix, hyperplane_lsh_pairs
 
     rows = [
         (i, [math.sin(0.7 * (i % 6 + 1) * (j + 1)) + 0.02 * math.sin(2.3 * i * (j + 3))
@@ -86,10 +106,19 @@ def test_hyperplane_precomputed_matrix_matches_md5_path(spark):
         for i in range(40)
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    kw = dict(threshold=0.9, n_bits=16, max_hamming=4)
-    slow = {(r.id_a, r.id_b, r.cos) for r in hyperplane_lsh_pairs(df, **kw).collect()}
-    fast = {(r.id_a, r.id_b, r.cos) for r in hyperplane_lsh_pairs(df, dim=12, **kw).collect()}
-    assert fast == slow and len(fast) > 0
+    n_bits, dim = 16, 12
+    mat = _hyperplane_matrix(n_bits, dim)
+    # one-hot rows read the reference weight w_seed[i] back out exactly
+    unit = spark.createDataFrame(
+        [(i, [1.0 if j == i else 0.0 for j in range(dim)]) for i in range(dim)],
+        "i int, v array<double>")
+    ref = unit.select("i", *[_md5_hyperplane_sign(F.col("v"), s).alias(f"b{s}")
+                             for s in range(n_bits)]).collect()
+    assert {(r.i, s): r[f"b{s}"] for r in ref for s in range(n_bits)} == \
+        {(i, s): int(mat[s][i] > 0) for i in range(dim) for s in range(n_bits)}
+
+    kw = dict(threshold=0.9, n_bits=n_bits, max_hamming=4)
+    assert hyperplane_lsh_pairs(df, dim=dim, **kw).count() > 0
 
     with pytest.raises(Exception, match="expected dim"):
         hyperplane_lsh_pairs(df, dim=10, **kw).collect()
@@ -99,11 +128,13 @@ def test_learned_ivf_recall_and_kmeans_properties(spark):
     """Learned-cell IVF (k-means fit) must hold the same recall@5 bar as the
     label-cell path against exact brute force, and the fit itself must be
     deterministic (fixed init, no RNG) with non-degenerate cells."""
-    from pcrawler_spark.operators.knn import assign_cells, kmeans_fit
+    from pcrawler_spark.operators.knn import assign_cells, ivf_topk_learned, kmeans_fit
     from pyspark.sql import functions as F
 
+    e = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    q = e.filter(F.col("vec_id") < 10)
     bf = entry_mod.q29_knn_bruteforce(spark, SF_DIR).collect()
-    ivf = entry_mod.q49_knn_ivf_learned(spark, SF_DIR).collect()
+    ivf = ivf_topk_learned(e, q, k=5, n_probe=2, n_cells=8, n_iter=3).collect()
     bf_sets = {}
     for r in bf:
         bf_sets.setdefault(r.query_id, set()).add(r.neighbor_id)
@@ -118,7 +149,6 @@ def test_learned_ivf_recall_and_kmeans_properties(spark):
         if (r.query_id, r.neighbor_id) in bf_cos:
             assert abs(bf_cos[(r.query_id, r.neighbor_id)] - r.cos) < 1e-9
 
-    e = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     cents = kmeans_fit(e, n_cells=8, n_iter=3)
     again = kmeans_fit(e, n_cells=8, n_iter=3)
     c1 = sorted((r.cell, tuple(r.centroid)) for r in cents.collect())
@@ -210,22 +240,22 @@ def test_pq_rerank_recall_vs_bruteforce(spark):
     synthetic embeddings) cannot hit.  R=100 (the q53 setting) is 20% of
     this 500-vector corpus — R=50 measured 0.88 here, so the candidate
     pool, not the re-rank, is the recall knob, exactly as in the paper."""
-    from pcrawler_spark.operators.knn import brute_force_topk, pq_rerank_topk
+    from pcrawler_spark.operators.knn import brute_force_topk, pq_topk
 
     e = spark.read.parquet(SF_DIR + "/embeddings.parquet")
     q = e.filter(F.col("vec_id") < 10)
     truth = brute_force_topk(e, q, k=5).collect()
-    got = pq_rerank_topk(e, q, dim=64, k=5, rerank=100,
-                         m_sub=16, n_codes=32, n_iter=2).collect()
+    got = pq_topk(e, q, dim=64, k=5, rerank=100,
+                  m_sub=16, n_codes=32, n_iter=2).collect()
     tset = {(r.query_id, r.neighbor_id) for r in truth}
     gset = {(r.query_id, r.neighbor_id) for r in got}
     recall = len(gset & tset) / len(tset)
     assert recall >= 0.9, f"PQ+rerank recall@5 too low: {recall}"
     # the q53 driver config fits on a 1-in-4 hash sample (train-on-sample):
     # recall must hold there too (measured 0.98 on this corpus)
-    got_s = pq_rerank_topk(e, q, dim=64, k=5, rerank=100,
-                           m_sub=16, n_codes=32, n_iter=2,
-                           fit_sample_mod=4).collect()
+    got_s = pq_topk(e, q, dim=64, k=5, rerank=100,
+                    m_sub=16, n_codes=32, n_iter=2,
+                    fit_sample_mod=4).collect()
     gset_s = {(r.query_id, r.neighbor_id) for r in got_s}
     recall_s = len(gset_s & tset) / len(tset)
     assert recall_s >= 0.9, f"sampled-fit recall@5 too low: {recall_s}"
@@ -321,20 +351,28 @@ def _clustered_embeddings(spark, n_clusters=4, per=25, dim=8):
         rows, "vec_id long, embedding array<double>, label int")
 
 
-def test_ivf_pq_residual_exactness_invariant(spark):
-    """True IVFADC (residual encoding): probing ALL cells with the exact
-    re-rank must EQUAL brute force — the end-to-end correctness invariant
-    that needs no oracle slot."""
-    from pcrawler_spark.operators.knn import brute_force_topk, ivf_pq_residual_topk
+_PQ = dict(dim=8, m_sub=4, n_codes=8, n_iter=2)
+
+
+@pytest.mark.parametrize("search, kw", [
+    ("pq_topk", _PQ),
+    ("ivf_pq_topk", dict(_PQ, n_probe=4)),
+    ("ivf_pq_residual_topk", dict(_PQ, n_probe=4)),
+    ("sq8_topk", {}),
+    ("ivf_sq8_topk", dict(n_probe=4)),
+], ids=["pq", "ivf_pq", "ivf_pq_residual", "sq8", "ivf_sq8"])
+def test_rerank_exactness_invariant(spark, search, kw):
+    """Every re-rank path: with ``rerank`` ≥ |corpus| and (IVF) every cell
+    probed, the candidate set is the whole corpus, so the exact re-rank
+    must EQUAL brute force row for row — the end-to-end correctness
+    invariant that needs no oracle slot."""
+    from pcrawler_spark.operators import knn
 
     df = _clustered_embeddings(spark)
     q = df.filter(F.col("vec_id") % 25 == 0)
-    truth = sorted((r.query_id, r.neighbor_id, r.rank)
-                   for r in brute_force_topk(df, q, k=5).collect())
-    got = sorted((r.query_id, r.neighbor_id, r.rank)
-                 for r in ivf_pq_residual_topk(
-                     df, q, dim=8, k=5, n_probe=4, m_sub=4, n_codes=8,
-                     n_iter=2, rerank=100).collect())
+    truth = sorted(map(tuple, knn.brute_force_topk(df, q, k=5).collect()))
+    got = sorted(map(tuple, getattr(knn, search)(df, q, k=5, rerank=100, **kw).collect()))
+    assert len(truth) == 4 * 5
     assert got == truth
 
 
@@ -416,24 +454,16 @@ def test_sq8_quality_compression_determinism(spark):
            sorted((r.id, tuple(r.codes)) for r in enc2)
 
 
-def test_ivf_sq8_exactness_and_pruning(spark):
+def test_ivf_sq8_prunes_to_probed_cell(spark):
     """ivf_sq8_topk (IVF cells + SQ8 codes — the composition sq8_topk's
-    docstring promises): probing ALL cells with the exact re-rank must
-    EQUAL brute force, and under probe-1 every neighbor must come from the
-    query's single probed cell — pruning is real, not decorative."""
+    docstring promises): under probe-1 every neighbor must come from the
+    query's single probed cell — pruning is real, not decorative.  (Its
+    exactness with every cell probed is in test_rerank_exactness_invariant.)"""
     import math
-    from pcrawler_spark.operators.knn import (
-        brute_force_topk, ivf_build, ivf_sq8_topk)
+    from pcrawler_spark.operators.knn import ivf_build, ivf_sq8_topk
 
     df = _clustered_embeddings(spark)
     q = df.filter(F.col("vec_id") % 25 == 0)
-    truth = sorted((r.query_id, r.neighbor_id, r.rank)
-                   for r in brute_force_topk(df, q, k=5).collect())
-    got = sorted((r.query_id, r.neighbor_id, r.rank)
-                 for r in ivf_sq8_topk(df, q, k=5, n_probe=4,
-                                       rerank=100).collect())
-    assert got == truth
-
     res = ivf_sq8_topk(df, q, k=5, n_probe=1).collect()
     assert len(res) > 0
     labels = {r.vec_id: r.label for r in df.collect()}

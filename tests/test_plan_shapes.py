@@ -188,6 +188,31 @@ def test_ivf_pq_plan_no_cartesian(spark):
     assert plan.count("BroadcastNestedLoopJoin") <= 2
 
 
+# (Exchange, Window, BroadcastNestedLoopJoin, SortMergeJoin) node counts of
+# each ANN query's physical plan, measured before the knn.py primitives
+# refactor.  They are upper bounds: a later change may remove such nodes
+# but never add one.
+_ANN_PLAN_BOUNDS = {
+    "q29_knn_bruteforce": (1, 1, 1, 0),
+    "q30_knn_ivf": (8, 4, 3, 1),
+    "q53_pq_rerank_topk": (4, 2, 0, 0),
+    "q54_ivf_pq_topk": (7, 3, 1, 0),
+    "q58_ivfadc_residual": (10, 3, 1, 0),
+    "q60_sq8_family": (6, 4, 2, 0),
+}
+
+
+@pytest.mark.parametrize("query", list(_ANN_PLAN_BOUNDS))
+def test_ann_plan_node_bounds(spark, query):
+    import re
+
+    plan = plan_of(getattr(entry_mod, query)(spark, SF_DIR))
+    nodes = ("Exchange", "Window", "BroadcastNestedLoopJoin", "SortMergeJoin")
+    counts = tuple(len(re.findall(rf"\(\d+\) {n}\b", plan)) for n in nodes)
+    bounds = _ANN_PLAN_BOUNDS[query]
+    assert all(c <= b for c, b in zip(counts, bounds)), (dict(zip(nodes, counts)), plan)
+
+
 def test_repeated_spans_plan_shape(spark):
     """q61: the gram count must be a partial-agg groupBy (skew-safe: a
     boilerplate gram combines map-side, never fanning 10^8 rows into one
