@@ -18,4 +18,6 @@ here is partition-aware, shuffle-minimal and driver-loop-free except the
 per-epoch commit decision.
 """
 
+from . import _zipcache  # noqa: F401  (skips per-task zip directory re-reads)
+
 __version__ = "0.1.0"

@@ -311,10 +311,11 @@ def kmeans_fit(corpus: DataFrame, n_cells: int = 8, n_iter: int = 3,
 def _ivf_exact(queries: DataFrame, cents: DataFrame, cells: DataFrame, k: int,
                n_probe: int, id_col: str, vec_col: str) -> DataFrame:
     """Exact cosine top-k inside each query's ``n_probe`` nearest cells;
-    ``cells`` holds the corpus as (neighbor_id, cv, cell)."""
+    ``cells`` holds the corpus as (neighbor_id, cv, cell).  The probe list
+    (queries × ``n_probe``) is broadcast, so the corpus never shuffles."""
     q = _vecs(queries, id_col, vec_col, "query_id", "qv")
     probes = _probe_cells(q, cents, n_probe).select("query_id", "qv", "cell")
-    return _exact_topk(probes.join(cells, on="cell"), k)
+    return _exact_topk(F.broadcast(probes).join(cells, on="cell"), k)
 
 
 def ivf_topk_learned(corpus: DataFrame, queries: DataFrame, k: int = 5,

@@ -5,10 +5,11 @@ Unlike the Excel ops-tool sink (driver-side by documented design —
 sources/excel.py), WARC is a WEB-SCALE format, so both directions stay
 distributed:
 
-* **sink**: one WARC file per partition, written executor-side inside
-  ``mapInPandas`` — no collect, no shuffle; the returned (path, n_records)
-  frame is the manifest.  At 100 TB this is exactly Common Crawl's own
-  layout: many ~1 GB WARC shards, one writer task each.
+* **sink**: one WARC file per partition (``part-<partition>.warc``),
+  written executor-side inside ``mapInPandas`` — no collect, no shuffle;
+  the returned (path, n_records) frame is the manifest.  At 100 TB this
+  is exactly Common Crawl's own layout: many ~1 GB WARC shards, one
+  writer task each.
 * **source**: ``binaryFile`` scan (one file = one input row = one parse
   task) + the pure-Python Content-Length-framed kernel
   (``kernels/warc.py``) behind ``mapInPandas``.  WARC's sequential
@@ -23,10 +24,10 @@ Catalyst), but it crosses the Arrow boundary once per FILE, not per row.
 from __future__ import annotations
 
 import os
-import uuid
 from typing import Iterator
 
 import pandas as pd
+from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
 
 from ..kernels.warc import build_warc, build_warc_gz, parse_warc, parse_warc_gz
@@ -50,13 +51,17 @@ def write_warc(df: DataFrame, out_dir: str, uri_col: str = "url",
                 recs.append((uri, date, str(payload).encode("utf-8")))
         if not recs:
             return
-        # uuid4 filename: tasks may retry/speculate; each attempt writes a
-        # fresh file and only the attempt that COMMITS reports its path
-        suffix = "warc.gz" if compress else "warc"
-        path = os.path.join(out_dir, f"part-{uuid.uuid4().hex}.{suffix}")
-        blob = build_warc_gz(recs) if compress else build_warc(recs)
-        with open(path, "wb") as f:
-            f.write(blob)
+        # commit protocol: the shard is named by partition, so a retried or
+        # speculative attempt replaces it instead of adding a duplicate; each
+        # attempt writes a "."-prefixed temp file (file listings skip it)
+        # and renames it into place atomically
+        ctx = TaskContext.get()
+        name = f"part-{ctx.partitionId():05d}.{'warc.gz' if compress else 'warc'}"
+        path = os.path.join(out_dir, name)
+        tmp = os.path.join(out_dir, f".{name}.{ctx.taskAttemptId()}.tmp")
+        with open(tmp, "wb") as f:
+            f.write(build_warc_gz(recs) if compress else build_warc(recs))
+        os.replace(tmp, path)
         yield pd.DataFrame({"warc_path": [path], "n_records": [len(recs)]})
 
     os.makedirs(out_dir, exist_ok=True)

@@ -202,34 +202,21 @@ def test_pq_adc_quality_and_compression(spark):
     assert all(len(r["cvec"]) == 4 for r in cb.collect())
 
 
-def test_kmeans_maxmin_bounded_actions(spark, monkeypatch):
+def test_kmeans_maxmin_bounded_actions(spark, count_actions):
     """init='maxmin' must stay inside the bounded-driver-action discipline:
     1 first-seed pick + (n_cells-1) single-pass struct-min aggs +
     n_iter centroid updates — no per-seed sort-scan, no count/toPandas.
     (The r3 version ran a full orderBy().limit(1) scan per seed.)"""
-    from pyspark.sql import DataFrame
     from pcrawler_spark.operators.knn import kmeans_fit
 
     rows = [(i, [float((i * 7 + d) % 13) for d in range(8)]) for i in range(200)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
     n_cells, n_iter = 6, 2
-    calls = {"collect": 0, "count": 0, "toPandas": 0}
-    orig = {k: getattr(DataFrame, k) for k in calls}
-
-    def make(k):
-        def wrapper(self, *a, **kw):
-            calls[k] += 1
-            return orig[k](self, *a, **kw)
-        return wrapper
-
-    for k in calls:
-        monkeypatch.setattr(DataFrame, k, make(k))
+    calls = count_actions()
     cents = kmeans_fit(df, n_cells=n_cells, n_iter=n_iter, init="maxmin")
-    assert calls["count"] == 0 and calls["toPandas"] == 0, calls
-    assert calls["collect"] <= 1 + (n_cells - 1) + n_iter, calls
-    for k in calls:
-        monkeypatch.setattr(DataFrame, k, orig[k])
+    assert dict(calls) == {"collect": 1 + (n_cells - 1) + n_iter,
+                           "count": 0, "toPandas": 0}
     assert cents.count() == n_cells
 
 

@@ -252,12 +252,10 @@ def test_compaction_preserves_state_and_bounds_dirs(spark, tmp_path):
     assert finals["plain"]["records"] == finals["compact"]["records"]
 
 
-def test_epoch_job_discipline(spark, tmp_path, monkeypatch):
-    """One epoch performs at most 2 driver-side metric actions (round 1 ran
+def test_epoch_job_discipline(spark, tmp_path, count_actions):
+    """One epoch performs exactly 2 driver-side metric actions (round 1 ran
     8 separate count jobs per epoch): one groupBy('decision') collect and
     one groupBy('kind') collect — no .count()/.toPandas() anywhere."""
-    from pyspark.sql import DataFrame
-
     cfg = SyntheticCrawlConfig(n_companies=30, n_industries=2, n_hosts=5)
     corpus, pages, hosts, seeds = _spark_corpus(spark, cfg)
     engine = CrawlEngine(
@@ -266,20 +264,9 @@ def test_epoch_job_discipline(spark, tmp_path, monkeypatch):
     )
     engine.catalog.rollback_uncommitted()
     engine.init_frontier(seeds)
-    calls = {"collect": 0, "count": 0, "toPandas": 0}
-    orig = {k: getattr(DataFrame, k) for k in calls}
-
-    def make(k):
-        def wrapper(self, *a, **kw):
-            calls[k] += 1
-            return orig[k](self, *a, **kw)
-        return wrapper
-
-    for k in calls:
-        monkeypatch.setattr(DataFrame, k, make(k))
+    calls = count_actions()
     assert engine.run_epoch(1) is not None
-    assert calls["count"] == 0 and calls["toPandas"] == 0, calls
-    assert calls["collect"] <= 2, calls
+    assert calls == {"collect": 2, "count": 0, "toPandas": 0}
 
 
 def test_repeated_crawl_compiles_no_new_code(spark, tmp_path):

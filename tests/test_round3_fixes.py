@@ -95,13 +95,11 @@ def test_bloom_reuse_with_recent_seen(spark):
     bloom.unpersist()
 
 
-def test_bloom_engine_steady_state_two_actions(spark, tmp_path, monkeypatch):
-    """With the Bloom path ACTIVE, a steady-state epoch performs at most 2
+def test_bloom_engine_steady_state_two_actions(spark, tmp_path, count_actions):
+    """With the Bloom path ACTIVE, a steady-state epoch performs exactly 2
     driver actions: the build costs one extra collect only on (re)build
     epochs, not every epoch (round-2 judge item: the per-epoch
     distinct-buckets collect is gone, the build is cached)."""
-    from pyspark.sql import DataFrame
-
     cfg = SyntheticCrawlConfig(n_companies=30, n_industries=2, n_hosts=5)
     corpus, pages, hosts, seeds = _spark_corpus(spark, cfg)
     engine = CrawlEngine(
@@ -113,26 +111,14 @@ def test_bloom_engine_steady_state_two_actions(spark, tmp_path, monkeypatch):
     engine.init_frontier(seeds)
     assert engine.run_epoch(1) is not None  # seen empty → no bloom yet
 
-    calls = {"collect": 0, "count": 0, "toPandas": 0}
-    orig = {k: getattr(DataFrame, k) for k in calls}
-
-    def make(k):
-        def wrapper(self, *a, **kw):
-            calls[k] += 1
-            return orig[k](self, *a, **kw)
-        return wrapper
-
-    for k in calls:
-        monkeypatch.setattr(DataFrame, k, make(k))
+    calls = count_actions()
     # epoch 2: first bloom build → 2 metric collects + 1 build collect
     assert engine.run_epoch(2) is not None
-    assert calls["count"] == 0 and calls["toPandas"] == 0, calls
-    assert calls["collect"] <= 3, calls
+    assert calls == {"collect": 3, "count": 0, "toPandas": 0}
     # epoch 3: cached bloom reused → back to the 2-action discipline
     calls["collect"] = 0
     assert engine.run_epoch(3) is not None
-    assert calls["count"] == 0 and calls["toPandas"] == 0, calls
-    assert calls["collect"] <= 2, calls
+    assert calls == {"collect": 2, "count": 0, "toPandas": 0}
 
 
 # ---------------------------------------------------------------------------

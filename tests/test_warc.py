@@ -57,6 +57,27 @@ def test_warc_spark_roundtrip_one_file_per_partition(spark, tmp_path):
     assert got == sorted(rows)
 
 
+def test_warc_rewrite_replaces_shards(spark, tmp_path):
+    """Shards are named by partition and renamed into place from a hidden
+    temp file, so writing the same frame again (what a retried or
+    speculative task does) replaces each shard instead of duplicating its
+    records, and leaves no temp file behind."""
+    from pcrawler_spark.sources.warc import read_warc, write_warc
+
+    rows = [(f"https://h{i % 3}.example/r/{i}", "2024-02-01T00:00:00Z",
+             f"<html>doc {i}</html>") for i in range(24)]
+    df = spark.createDataFrame(
+        rows, "url string, warc_date string, html string").coalesce(3)
+    out = tmp_path / "warc_twice"
+    for _ in range(2):
+        write_warc(df, str(out)).collect()
+    assert sorted(p.name for p in out.iterdir()) == [
+        "part-00000.warc", "part-00001.warc", "part-00002.warc"]
+    got = sorted((r["url"], r["warc_date"], r["html"])
+                 for r in read_warc(spark, str(out)).collect())
+    assert got == sorted(rows)
+
+
 def test_warc_gz_kernel_memberwise_roundtrip():
     from pcrawler_spark.kernels.warc import (build_warc, build_warc_gz,
                                              parse_warc_gz)
