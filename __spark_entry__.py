@@ -1108,58 +1108,60 @@ def _synthetic_pages(spark):
 
 
 def q32_extract_details(spark, sf):
-    from pcrawler_spark.functions import extract_details_udf, with_url_hash
+    """Detail records from the crawler's own extraction stage
+    (``fused_extract``, the single mapInPandas crossing every crawl runs)."""
+    from pcrawler_spark.functions import with_url_hash
     from pcrawler_spark.operators.dedup import dedup_keep_first
+    from pcrawler_spark.plans.singlepass import _DETAIL_COLS, classify_urls, fused_extract
 
     _, pages = _synthetic_pages(spark)
     idx = dedup_keep_first(with_url_hash(pages, "url"), ["url_hash"], "warc_ts", ["canon_url"])
     return (
-        idx.filter(F.col("canon_url").contains("-tong-quan"))
-        .withColumn("rec", extract_details_udf("html"))
-        .select("canon_url", "rec.*")
+        fused_extract(classify_urls(idx))
+        .filter(F.col("kind") == "detail")
+        .select("canon_url", *_DETAIL_COLS)
     )
 
 
 def q33_extract_text_identity(spark, sf):
     """Byte-identity against the GENERATOR truth (not the engine's own
-    output): per canonical url, md5 of the kernel-re-extracted text; the
-    DuckDB oracle reads the checked-in truth fixture."""
-    from pcrawler_spark.functions import extract_text_udf, with_url_hash
+    output): per canonical url, md5 of the text the crawler's fused
+    extraction stage re-derives; the DuckDB oracle reads the checked-in
+    truth fixture."""
+    from pcrawler_spark.functions import with_url_hash
+    from pcrawler_spark.plans.singlepass import classify_urls, fused_extract
 
     _, pages = _synthetic_pages(spark)
-    idx = with_url_hash(pages, "url")
-    return (
-        idx.select("canon_url", F.md5(extract_text_udf("html")).alias("text_md5"))
-        .distinct()
-    )
+    ext = fused_extract(classify_urls(with_url_hash(pages, "url")))
+    return ext.select("canon_url", F.md5("text").alias("text_md5")).distinct()
 
 
 def q34_politeness_schedule(spark, sf):
     """Two branches over the checked-in frontier snapshot:
 
-    * ``scheduled_urls`` — the politeness scheduler's row-level output;
-      the oracle recomputes the budget formula
+    * ``scheduled_urls`` — the scheduled rows of ``politeness_decide``,
+      the decide step the crawl engine runs every epoch; the oracle
+      recomputes the budget formula
       floor(epoch_s/delay)*max_parallel + robots filter + per-host rank
       in SQL over the SAME parquet files.
-    * ``decision_counts`` — plans/singlepass.schedule_decisions (the
-      EXACT factored chain the bench's fused bucketed crawl job runs:
-      classify → kind priority → one host exchange → politeness decide)
-      aggregated per (host, decision, kind).  The counts are invariant
-      to the url_hash tiebreak inside a kind class (priority is a
-      function of kind, so the budget cutoff splits between kind blocks
-      deterministically), which makes the production scheduler's
-      decisions exactly replayable in the DuckDB oracle without a
-      portable hash.  Round-5 judge item #4: the singlepass schedule's
-      per-host budget decisions stay pinned as the plan evolves."""
-    from pcrawler_spark.operators.politeness import politeness_schedule
+    * ``decision_counts`` — plans/singlepass.schedule_decisions, the one
+      scheduling chain both fused passes (``schedule_and_extract`` and the
+      bucketed job) run: ``classify_urls`` (the engine's classifier) →
+      ``kind_priority`` → politeness decide, aggregated per (host,
+      decision, kind).  The counts are invariant to the url_hash
+      tiebreak inside a kind class (priority is a function of kind, so
+      the budget cutoff splits between kind blocks deterministically),
+      which makes the production scheduler's decisions exactly
+      replayable in the DuckDB oracle without a portable hash."""
+    from pcrawler_spark.operators.politeness import politeness_decide
     from pcrawler_spark.plans.singlepass import schedule_decisions
 
     frontier = spark.read.parquet(f"{_FIXTURES}/q34_frontier.parquet")
     hosts = spark.read.parquet(f"{_FIXTURES}/q34_hosts.parquet")
-    scheduled, _deferred, _disallowed = politeness_schedule(
+    scheduled = politeness_decide(
         frontier, hosts, epoch_seconds=10.0,
         order_cols=("priority", "retry_count", "canon_url"),
-    )
+    ).filter(F.col("decision") == "scheduled")
     a = scheduled.select(
         F.lit("scheduled_urls").alias("branch"), "host", "canon_url",
         F.lit(None).cast("string").alias("decision"),

@@ -5,7 +5,8 @@ dedup → join/export over web pages) as an idiomatic Spark pipeline:
 
 * ``pcrawler_spark.kernels``   — pure-Python extraction kernels (no Spark),
   the byte-identity layer verified against golden fixtures.
-* ``pcrawler_spark.functions`` — vectorized pandas/Arrow UDF wrappers.
+* ``pcrawler_spark.functions`` — JVM-side URL canonicalizer/hash and the
+  phone-normalizing pandas UDF.
 * ``pcrawler_spark.operators`` — DataFrame-level operators (dedup, seen-set
   anti-join, politeness scheduler, export join/explode, similarity, ANN...).
 * ``pcrawler_spark.plans``     — the epoch driver loop + parquet-backed

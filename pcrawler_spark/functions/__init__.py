@@ -1,15 +1,3 @@
-from .udfs import (
-    DETAILS_SCHEMA,
-    extract_details_udf,
-    extract_text_udf,
-    normalize_phones_udf,
-    with_url_hash,
-)
+from .udfs import normalize_phones_udf, with_url_hash
 
-__all__ = [
-    "DETAILS_SCHEMA",
-    "extract_details_udf",
-    "extract_text_udf",
-    "normalize_phones_udf",
-    "with_url_hash",
-]
+__all__ = ["normalize_phones_udf", "with_url_hash"]

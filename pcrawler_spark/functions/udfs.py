@@ -1,9 +1,8 @@
-"""Vectorized pandas/Arrow UDF wrappers around the pure-Python kernels.
+"""Column functions shared by the crawl plans: the JVM-side URL
+canonicalizer and hash, and the Arrow-batched phone-normalizing UDF.
 
-The reference loops Python-side over rows (SURVEY.md §1.3); here every
-extraction runs inside Arrow-batched pandas UDFs — the only Python in the
-hot path, with all relational work staying JVM-side.  Per the input_hint:
-"pyspark.sql DataFrame + vectorized pandas/Arrow UDFs (no per-row Python)".
+Page extraction is not here: every page crosses the Arrow boundary once,
+in the fused ``mapInPandas`` stage of ``plans/singlepass.fused_extract``.
 
 The 64-bit url_hash is Spark's built-in ``xxhash64`` over the canonical URL
 string (JVM-side, codegen'd) so frontier/seen tables agree everywhere.
@@ -17,29 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from ..kernels import extract_company_details, extract_text, split_phones
-from ..kernels.details import DETAIL_FIELDS
-
-# Struct returned by the detail extractor (company_name/company_url are
-# joined in from the frontier, not re-extracted, so they're excluded here).
-_EXTRACT_FIELDS = [f for f in DETAIL_FIELDS if f not in ("company_name", "company_url")]
-DETAILS_SCHEMA = T.StructType(
-    [T.StructField("company_name", T.StringType())]
-    + [T.StructField(f, T.StringType()) for f in _EXTRACT_FIELDS]
-)
-
-
-@pandas_udf(DETAILS_SCHEMA)
-def extract_details_udf(html: pd.Series) -> pd.DataFrame:
-    rows = [extract_company_details(h) for h in html]
-    return pd.DataFrame(
-        {c: [r[c] for r in rows] for c in ["company_name"] + _EXTRACT_FIELDS}
-    )
-
-
-@pandas_udf(T.StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    return pd.Series([extract_text(h) for h in html])
+from ..kernels import split_phones
 
 
 @pandas_udf(T.ArrayType(T.StringType()))

@@ -1,6 +1,6 @@
 from .dedup import dedup_exact, dedup_keep_first, dedup_keep_last
-from .seen import anti_join_seen, bloom_prefilter
-from .politeness import politeness_schedule, salted_repartition
+from .seen import anti_join_seen
+from .politeness import politeness_decide, salted_repartition
 from .export import export_contacts
 from .concomp import canonical_docs, connected_components
 
@@ -9,8 +9,7 @@ __all__ = [
     "dedup_keep_first",
     "dedup_keep_last",
     "anti_join_seen",
-    "bloom_prefilter",
-    "politeness_schedule",
+    "politeness_decide",
     "salted_repartition",
     "export_contacts",
     "connected_components",

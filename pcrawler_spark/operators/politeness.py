@@ -15,10 +15,11 @@ Ordering parity with the reference: within a host, URLs are ranked by
 reference's FIFO ``ORDER BY crawled_at`` batches (db_manager.py:176-178)
 with retry-demotion (tasks.py:204-268).
 
-Host skew: a Zipf frontier concentrates on mega-hosts.  The fetch/extract
-stage is repartitioned on a *salted* host key so one host's URLs spread over
-several partitions while small hosts stay co-located (single shuffle; salt
-factor derived from observed per-host counts, adapting each epoch).
+Host skew: a Zipf frontier concentrates on mega-hosts.  The scheduler's
+defusal is ``politeness_decide(salted_rank_partitions=…)``;
+:func:`salted_repartition` spreads one host's rows over several partitions
+on a *salted* host key (salt factor from observed per-host counts) for
+stages that need it — no crawl plan calls it today.
 """
 
 from __future__ import annotations
@@ -158,22 +159,6 @@ def politeness_decide(
         .otherwise(F.lit("deferred"))
     )
     return df.withColumn("decision", decision).drop(*drop)
-
-
-def politeness_schedule(
-    frontier: DataFrame,
-    hosts: DataFrame,
-    epoch_seconds: float = 60.0,
-    order_cols=("priority", "retry_count", "url_hash"),
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Split a pending frontier into (scheduled, deferred, disallowed) —
-    thin wrapper over :func:`politeness_decide` for callers that want the
-    three splits as separate DataFrames."""
-    decided = politeness_decide(frontier, hosts, epoch_seconds, order_cols)
-    scheduled = decided.filter(F.col("decision") == "scheduled").drop("decision")
-    deferred = decided.filter(F.col("decision") == "deferred").drop("decision")
-    disallowed = decided.filter(F.col("decision") == "disallowed").drop("decision")
-    return scheduled, deferred, disallowed
 
 
 def hosts_from_robots(robots: DataFrame, body_col: str = "robots_txt",

@@ -198,16 +198,6 @@ def apply_bloom(candidates: DataFrame, bloom: PartitionedBloom) -> DataFrame:
     ).drop("_bucket")
 
 
-def bloom_partitioned_filter(candidates: DataFrame, seen: DataFrame,
-                             hash_col: str = "url_hash",
-                             n_buckets: int = DEFAULT_N_BUCKETS,
-                             fpp: float = 0.01) -> DataFrame:
-    """Back-compat wrapper: build (one action) + apply in one call."""
-    bloom = build_partitioned_bloom(
-        seen, "host" in candidates.columns, hash_col, n_buckets, fpp)
-    return apply_bloom(candidates, bloom)
-
-
 def anti_join_seen(candidates: DataFrame, seen: DataFrame,
                    hash_col: str = "url_hash",
                    use_bloom: bool = False, fpp: float = 0.01,
@@ -238,45 +228,3 @@ def anti_join_seen(candidates: DataFrame, seen: DataFrame,
     maybe = flagged.filter(F.col("_maybe_seen")).drop("_maybe_seen")
     confirmed_new = maybe.join(seen.select(hash_col), on=hash_col, how="left_anti")
     return definitely_new.unionByName(confirmed_new)
-
-
-# ---------------------------------------------------------------------------
-# single-bitmap helpers kept for micro-tests / back-compat; the partitioned
-# path above is the production one
-# ---------------------------------------------------------------------------
-
-def build_bloom(seen: DataFrame, hash_col: str = "url_hash",
-                expected_items: int | None = None, fpp: float = 0.01):
-    """One flat bitmap via the distributed per-bucket build, OR-merged —
-    only sensible at small scale (micro-tests)."""
-    rows = build_bloom_buckets(
-        seen, F.lit(0).cast("int"), hash_col, fpp
-    ).collect()
-    assert len(rows) <= 1
-    if not rows:
-        return np.zeros(128, dtype=np.uint8), 1024, 7
-    r = rows[0]
-    return np.frombuffer(r["bitmap"], dtype=np.uint8).copy(), r["m_bits"], r["k"]
-
-
-def bloom_might_contain_udf(spark, bitmap: np.ndarray, m_bits: int, k: int):
-    b = spark.sparkContext.broadcast(bitmap.tobytes())
-
-    @F.pandas_udf("boolean")
-    def might_contain(h):
-        bm = np.frombuffer(b.value, dtype=np.uint8)
-        hs = h.to_numpy(dtype=np.int64, na_value=0).view(np.uint64)
-        hit = np.ones(len(hs), dtype=bool)
-        for pos in _bloom_positions(hs, m_bits, k):
-            hit &= (bm[pos >> 3] & (np.uint8(1) << (pos & 7).astype(np.uint8))) != 0
-        return pd.Series(hit)
-
-    return might_contain
-
-
-def bloom_prefilter(candidates: DataFrame, seen: DataFrame,
-                    hash_col: str = "url_hash", expected_items: int | None = None,
-                    fpp: float = 0.03) -> DataFrame:
-    bitmap, m_bits, k = build_bloom(seen, hash_col, expected_items, fpp)
-    might = bloom_might_contain_udf(candidates.sparkSession, bitmap, m_bits, k)
-    return candidates.withColumn("_maybe_seen", might(F.col(hash_col)))

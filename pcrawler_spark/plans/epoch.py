@@ -11,11 +11,13 @@ Scale notes (10^10-URL design point):
 * frontier/seen live in the epoch catalog partitioned by epoch; pending is
   ``frontier ∖ seen`` — one anti-join shuffle on the 64-bit hash, no state
   mutation ever (S10 → append-only; SURVEY.md §7.4.5).
-* the scheduled set per epoch is budget-bounded by politeness, so the fetch
-  join broadcasts the *scheduled* side against the big pages table — the
-  10^10-row pages side is never shuffled.
-* extraction is Arrow-batched pandas UDFs over a salted-host repartition
-  (Zipf mega-hosts spread across partitions).
+* the scheduled set per epoch is budget-bounded by politeness.  The fetch
+  join broadcasts it onto the page store only while it is at most
+  ``broadcast_max_scheduled`` rows, and otherwise leaves the join to a
+  shuffle plan; on a bucketed page store the keys shuffle into the bucket
+  layout instead and nothing is broadcast.
+* extraction is ONE fused Arrow pass (``singlepass.fused_extract``) over
+  the fetch join's output partitions, with no repartition before it.
 * a deterministic "flaky fetch" simulator exercises the retry path
   (reference: 4 retries with backoff, tasks.py:204-268 → here: priority
   demotion via retry_count, re-scheduled next epoch).
@@ -24,14 +26,14 @@ Scale notes (10^10-URL design point):
 from __future__ import annotations
 
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.udfs import with_url_hash
-from .singlepass import fused_extract
+from .singlepass import classify_urls, fused_extract, kind_priority
 from ..operators.dedup import dedup_keep_first, dedup_keep_last
 from ..operators.politeness import politeness_decide
 from ..operators.seen import anti_join_seen, build_partitioned_bloom, seen_host_bucket_col
@@ -69,7 +71,6 @@ class CrawlRunConfig:
     max_epochs: int = 50
     max_retries: int = 4
     simulate_flaky_rate: float = 0.0   # deterministic first-attempt failures
-    num_partitions: int | None = None
     # circuit breaker (reference: app/utils/circuit_breaker.py:52-92 —
     # CLOSED/OPEN/HALF_OPEN per resource): a host with ≥ threshold failures
     # in an epoch is OPEN (skipped) for the next `cooldown` epochs, then
@@ -137,27 +138,12 @@ class CrawlEngine:
                 "url_hash", "canon_url", "host", "html", "warc_ts", "lang"
             ).persist()
 
-    # ---- url classification (corpus conventions; cf. 1900comvn.yml:33) ----
-
-    def _classify(self, df: DataFrame) -> DataFrame:
-        is_detail = F.col("canon_url").contains("-tong-quan")
-        is_listing = F.col("host") == F.lit(self.cfg.directory_host)
-        return df.withColumn(
-            "kind",
-            F.when(is_detail, "detail").when(is_listing, "listing").otherwise("contact"),
-        ).withColumn(
-            "url_type",
-            F.when(F.col("kind") != "contact", F.lit(None).cast("string"))
-            .when(F.col("host").contains("facebook.com"), "facebook")
-            .otherwise("website"),
-        )
-
     # ---- bootstrap ---------------------------------------------------------
 
     def init_frontier(self, seeds: DataFrame) -> None:
         """Epoch -0 commit: seeds become the initial frontier."""
         f = with_url_hash(seeds, "url")
-        f = self._classify(f).select(
+        f = classify_urls(f, self.cfg.directory_host).select(
             "url_hash", "canon_url", "host", "kind", "url_type",
             F.coalesce(F.col("priority"), F.lit(0)).cast("int").alias("priority"),
             F.lit(0).alias("depth"),
@@ -255,10 +241,12 @@ class CrawlEngine:
 
         # ONE plan annotates every pending row with its fate; every metric
         # below comes from a single groupBy('decision') action instead of
-        # the round-1 engine's 8 count jobs per epoch
+        # the round-1 engine's 8 count jobs per epoch.  Pending rows were
+        # classified and prioritised when inserted (classify_urls +
+        # kind_priority, as in schedule_decisions) and carry real
+        # retry_counts, so they enter the decide step directly
         decided = politeness_decide(
             pending, self.hosts, epoch_seconds=cfgc.epoch_seconds,
-            order_cols=("priority", "retry_count", "url_hash"),
             salted_rank_partitions=cfgc.salted_rank_partitions,
         )
 
@@ -407,13 +395,11 @@ class CrawlEngine:
                 .otherwise(F.lit(None).cast("string")).alias("company_name"),
             )
         )
-        # priority is a pure function of kind — listings drain before details
-        # before contacts, mirroring the reference's phase order (main.py:661-697)
-        new_frontier = self._classify(with_url_hash(new_links, "url")).select(
+        new_frontier = classify_urls(
+            with_url_hash(new_links, "url"), cfgc.directory_host
+        ).select(
             "url_hash", "canon_url", "host", "kind", "url_type",
-            F.when(F.col("kind") == "listing", 0)
-            .when(F.col("kind") == "detail", 1)
-            .otherwise(2).cast("int").alias("priority"),
+            kind_priority().alias("priority"),
             F.col("depth").cast("int"),
             F.col("contact_depth").cast("int"),
             "industry", "company_name",

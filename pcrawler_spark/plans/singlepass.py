@@ -16,12 +16,12 @@ from __future__ import annotations
 from typing import Iterable
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.udfs import with_url_hash
 from ..operators.dedup import dedup_keep_first_agg
-from ..operators.politeness import politeness_decide, salted_repartition
+from ..operators.politeness import politeness_decide
 
 EXTRACT_ALL_SCHEMA = (
     "url_hash long, canon_url string, kind string, url_type string, "
@@ -38,7 +38,13 @@ _DETAIL_COLS = [
 ]
 
 
+_INPUT_COLS = ("url_hash", "canon_url", "kind", "url_type", "html")
+
+
 def _extract_batch(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
+    """The fused kernel pass over Arrow batches of :data:`_INPUT_COLS`;
+    any further input column is passthrough, echoed into the output
+    unchanged.  Reached only through :func:`fused_extract`."""
     # imports inside: runs on executors via the shipped package zip
     from ..html import parse_html
     from ..kernels import (
@@ -83,31 +89,28 @@ def _extract_batch(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
             out["out_links"].append(links)
             # the byte-identity invariant: re-derived page text for every url
             out["text"].append(extract_text(html, root=root))
-        yield pd.DataFrame(out)
+        frame = pd.DataFrame(out)
+        for c in pdf.columns:
+            if c not in _INPUT_COLS:
+                frame[c] = pdf[c].to_numpy()
+        yield frame
 
 
 def fused_extract(df: DataFrame, passthrough: dict[str, str] | None = None) -> DataFrame:
-    """Run the fused extraction over a DataFrame that has (url_hash,
-    canon_url, kind, url_type, html) plus optional passthrough columns
-    (name → spark type) that are echoed into the output unchanged — used by
-    the epoch engine to carry frontier metadata (industry, depth, ...)
-    through the single Arrow crossing."""
+    """The crawl's one extraction stage: a single ``mapInPandas`` over a
+    DataFrame that has (url_hash, canon_url, kind, url_type, html) plus
+    optional passthrough columns (name → spark type) that are echoed into
+    the output unchanged — used by the epoch engine to carry frontier
+    metadata (industry, depth, ...) through the single Arrow crossing."""
     passthrough = passthrough or {}
-    base_cols = ["url_hash", "canon_url", "kind", "url_type", "html"]
-    cols = base_cols + list(passthrough)
     schema = EXTRACT_ALL_SCHEMA + "".join(f", {c} {t}" for c, t in passthrough.items())
-
-    def run(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-        for pdf in batches:
-            for out in _extract_batch([pdf[base_cols]]):
-                for c in passthrough:
-                    out[c] = pdf[c].to_numpy()
-                yield out
-
-    return df.select(*cols).mapInPandas(run, schema)
+    return df.select(*_INPUT_COLS, *passthrough).mapInPandas(_extract_batch, schema)
 
 
 def classify_urls(df: DataFrame, directory_host: str = "1900.example.vn") -> DataFrame:
+    """The URL classifier (corpus conventions; cf. 1900comvn.yml:33): adds
+    ``kind`` (detail | listing | contact) and, for contact urls, the
+    ``url_type`` (facebook | website) from ``canon_url`` and ``host``."""
     is_detail = F.col("canon_url").contains("-tong-quan")
     is_listing = F.col("host") == F.lit(directory_host)
     return df.withColumn(
@@ -121,16 +124,22 @@ def classify_urls(df: DataFrame, directory_host: str = "1900.example.vn") -> Dat
     )
 
 
+def kind_priority() -> Column:
+    """Scheduling priority as a pure function of ``kind``: listings drain
+    before details before contacts, mirroring the reference's phase order
+    (main.py:661-697)."""
+    return F.when(F.col("kind") == "listing", 0).when(F.col("kind") == "detail", 1).otherwise(2)
+
+
 def schedule_and_extract(
     spark: SparkSession,
     pages: DataFrame,
     hosts: DataFrame,
     epoch_seconds: float = 1e9,
     directory_host: str = "1900.example.vn",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """The full steady-state pass: canonicalize+hash → keep-oldest dedup →
-    politeness/robots schedule → fused extract.
+    :func:`schedule_decisions` → fused extract.
 
     Shuffle discipline (the 100 TB concern): the whole scheduling chain runs
     on a NARROW projection (hash/host/ts — ~40 bytes/row) through exactly
@@ -148,25 +157,15 @@ def schedule_and_extract(
     # real pages and never enter scheduling or extraction
     idx = with_url_hash(pages.filter(F.length("html") > 100), "url")
     meta = idx.select("url_hash", "canon_url", "host", "warc_ts")
-    meta = classify_urls(meta, directory_host).withColumn(
-        "priority",
-        F.when(F.col("kind") == "listing", 0).when(F.col("kind") == "detail", 1).otherwise(2),
-    )
-    P = num_partitions or spark.sparkContext.defaultParallelism
-    meta = meta.repartition(P, "host")  # the scheduling chain's ONE exchange
-    dd = dedup_keep_first_agg(
-        meta, ["host", "url_hash"], ["warc_ts", "canon_url"],
-        ["kind", "url_type", "priority"],
-    ).withColumn("retry_count", F.lit(0))
-    decided = politeness_decide(dd, hosts, epoch_seconds=epoch_seconds)
+    # the scheduling chain's ONE exchange
+    meta = meta.repartition(spark.sparkContext.defaultParallelism, "host")
+    dd = dedup_keep_first_agg(meta, ["host", "url_hash"], ["warc_ts", "canon_url"], [])
+    decided = schedule_decisions(dd, hosts, epoch_seconds, directory_host)
     keys = decided.filter(F.col("decision") == "scheduled").select("url_hash", "warc_ts")
     fetched = idx.select("url_hash", "canon_url", "host", "warc_ts", "html").join(
         F.broadcast(keys), on=["url_hash", "warc_ts"], how="inner"
     )
-    fetched = classify_urls(fetched, directory_host)
-    return fetched.select(
-        "url_hash", "canon_url", "kind", "url_type", "html"
-    ).mapInPandas(_extract_batch, EXTRACT_ALL_SCHEMA)
+    return fused_extract(classify_urls(fetched, directory_host))
 
 
 def schedule_decisions(
@@ -175,19 +174,18 @@ def schedule_decisions(
     epoch_seconds: float = 1e9,
     directory_host: str = "1900.example.vn",
 ) -> DataFrame:
-    """The bucketed pass's SCHEDULING chain, factored out: classify →
-    kind-derived priority → the chain's ONE exchange on ``host`` →
-    politeness/robots decide.  Input is the narrow (url_hash, canon_url,
-    host) projection; output is the frontier annotated with ``decision``
+    """The SCHEDULING chain: classify → kind-derived priority →
+    politeness/robots decide (whose windows share ONE exchange on
+    ``host``).  Input is the narrow (url_hash, canon_url, host) projection;
+    output is the frontier annotated with ``decision``
     (scheduled | deferred | disallowed), ``kind`` and ``url_type``.
 
-    Both :func:`schedule_and_extract_bucketed` (the bench headline job)
-    and q34's decision-counts oracle branch call THIS function, so the
-    production scheduler's decisions stay pinned by the driver's DuckDB
-    parity gate as the plan evolves (round-5 judge item #4)."""
+    :func:`schedule_and_extract`, :func:`schedule_and_extract_bucketed`
+    (the bench headline job) and q34's decision-counts oracle branch all
+    call THIS function, so the production scheduler's decisions stay
+    pinned by the driver's DuckDB parity gate as the plan evolves."""
     meta = classify_urls(pages_meta, directory_host).withColumn(
-        "priority",
-        F.when(F.col("kind") == "listing", 0).when(F.col("kind") == "detail", 1).otherwise(2),
+        "priority", kind_priority()
     ).withColumn("retry_count", F.lit(0))
     # no pre-repartition (r7): politeness_decide's pending-count and rank
     # windows share ONE exchange of the frontier on host, so an explicit
@@ -231,7 +229,4 @@ def schedule_and_extract_bucketed(
     )
     keys = decided.filter(F.col("decision") == "scheduled").select("url_hash")
     fetched = pages.join(keys.hint("shuffle_hash"), on="url_hash", how="inner")
-    fetched = classify_urls(fetched, directory_host)
-    return fetched.select(
-        "url_hash", "canon_url", "kind", "url_type", "html"
-    ).mapInPandas(_extract_batch, EXTRACT_ALL_SCHEMA)
+    return fused_extract(classify_urls(fetched, directory_host))

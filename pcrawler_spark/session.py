@@ -8,6 +8,7 @@ the session timezone is pinned to UTC so DuckDB oracle comparisons are exact.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import zipfile
@@ -18,20 +19,31 @@ from pyspark.sql import SparkSession
 def _package_zip() -> str:
     """Zip this package so executors can import it regardless of the
     driver's cwd — the local-mode equivalent of ``spark-submit --py-files``
-    (north_rule deployment shape).  Cached per process."""
+    (north_rule deployment shape).
+
+    The zip lives in the temp dir under a digest of the package sources
+    (relative paths and bytes): checkouts with different sources get
+    different zips, so executors that see only the pyFiles always import
+    the driver's own code, and a zip for the same sources is reused."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    out = os.path.join(tempfile.gettempdir(), "pcrawler_spark_pyfiles.zip")
-    sources = []
+    sources = {}
     for root, _dirs, files in os.walk(pkg_dir):
-        sources.extend(os.path.join(root, fn) for fn in files if fn.endswith(".py"))
-    newest = max(os.path.getmtime(p) for p in sources)
-    # rebuild when any source is newer — a stale zip silently breaks
-    # executors that don't share the driver's sys.path (local-cluster mode)
-    if not os.path.exists(out) or os.path.getmtime(out) < newest:
+        for fn in files:
+            if fn.endswith(".py"):
+                full = os.path.join(root, fn)
+                with open(full, "rb") as f:
+                    sources[os.path.relpath(full, os.path.dirname(pkg_dir))] = f.read()
+    digest = hashlib.sha256()
+    for rel in sorted(sources):
+        digest.update(f"{rel}\0{len(sources[rel])}\0".encode())
+        digest.update(sources[rel])
+    out = os.path.join(tempfile.gettempdir(),
+                       f"pcrawler_spark_pyfiles-{digest.hexdigest()[:16]}.zip")
+    if not os.path.exists(out):
         tmp = out + f".{os.getpid()}.tmp"
         with zipfile.ZipFile(tmp, "w") as z:
-            for full in sorted(sources):
-                z.write(full, os.path.relpath(full, os.path.dirname(pkg_dir)))
+            for rel in sorted(sources):
+                z.writestr(rel, sources[rel])
         os.replace(tmp, out)
     return out
 
@@ -80,10 +92,11 @@ def get_spark(
     )
     # register at startup (works for local-cluster executors too) and again
     # dynamically for sessions created through a pre-existing context
-    builder = builder.config("spark.submit.pyFiles", _package_zip())
+    pyfiles = _package_zip()
+    builder = builder.config("spark.submit.pyFiles", pyfiles)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.addPyFile(_package_zip())
+    spark.sparkContext.addPyFile(pyfiles)
     return spark

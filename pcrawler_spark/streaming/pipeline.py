@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.udfs import with_url_hash
-from ..plans.singlepass import EXTRACT_ALL_SCHEMA, _extract_batch, classify_urls
+from ..plans.singlepass import classify_urls, fused_extract
 
 PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
 
@@ -38,10 +38,7 @@ def read_pages_stream(spark: SparkSession, input_dir: str,
 def extract_stream(pages_stream: DataFrame,
                    directory_host: str = "1900.example.vn") -> DataFrame:
     """Streaming variant of the fused extract: same kernels, same schema."""
-    idx = classify_urls(with_url_hash(pages_stream, "url"), directory_host)
-    return idx.select(
-        "url_hash", "canon_url", "kind", "url_type", "html"
-    ).mapInPandas(_extract_batch, EXTRACT_ALL_SCHEMA)
+    return fused_extract(classify_urls(with_url_hash(pages_stream, "url"), directory_host))
 
 
 def fetch_metrics_stream(pages_stream: DataFrame,

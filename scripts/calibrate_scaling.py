@@ -59,7 +59,7 @@ def run_level(n_exec: int, corpus_path: str, bpath: str | None, n: int) -> dict:
 
     from pcrawler_spark.operators.politeness import politeness_decide
     from pcrawler_spark.plans.singlepass import (
-        classify_urls, schedule_and_extract, schedule_and_extract_bucketed)
+        classify_urls, kind_priority, schedule_and_extract, schedule_and_extract_bucketed)
     from pcrawler_spark.session import get_spark
 
     spark = get_spark(
@@ -83,11 +83,7 @@ def run_level(n_exec: int, corpus_path: str, bpath: str | None, n: int) -> dict:
             def sched_only():
                 meta = classify_urls(
                     pages_t.select("url_hash", "canon_url", "host", "warc_ts")
-                ).withColumn(
-                    "priority",
-                    F.when(F.col("kind") == "listing", 0)
-                    .when(F.col("kind") == "detail", 1).otherwise(2),
-                ).withColumn("retry_count", F.lit(0))
+                ).withColumn("priority", kind_priority()).withColumn("retry_count", F.lit(0))
                 meta = meta.repartition(spark.sparkContext.defaultParallelism, "host")
                 dec = politeness_decide(meta, hosts, epoch_seconds=1e9)
                 return dec.filter(F.col("decision") == "scheduled").select("url_hash")

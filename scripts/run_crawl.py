@@ -12,7 +12,7 @@ Examples
 Local smoke (synthetic corpus, fresh state)::
 
     spark-submit --master 'local[8]' \
-        --py-files /tmp/pcrawler_spark_pyfiles.zip \
+        --py-files "$(python -c 'from pcrawler_spark.session import _package_zip; print(_package_zip())')" \
         scripts/run_crawl.py --synthetic 100 --state-dir /tmp/crawl_state
 
 Cluster shape (N executors; Iceberg/parquet state dir on shared storage)::

@@ -8,7 +8,7 @@ Examples
 Local smoke::
 
     spark-submit --master 'local[8]' \
-        --py-files /tmp/pcrawler_spark_pyfiles.zip \
+        --py-files "$(python -c 'from pcrawler_spark.session import _package_zip; print(_package_zip())')" \
         scripts/run_training.py --docs /root/testdata/sf0.01/documents.parquet \
         --out /tmp/training_out
 

@@ -52,7 +52,7 @@ def test_scheduling_chain_is_jvm_only(spark):
     never carry the html column through an exchange."""
     from pcrawler_spark.functions.udfs import with_url_hash
     from pcrawler_spark.operators.dedup import dedup_keep_first_agg
-    from pcrawler_spark.operators.politeness import politeness_schedule
+    from pcrawler_spark.operators.politeness import politeness_decide
     from pcrawler_spark.plans.singlepass import classify_urls
     from pcrawler_spark.sources.synthetic import SyntheticCrawlConfig, generate_crawl_corpus
 
@@ -68,12 +68,21 @@ def test_scheduling_chain_is_jvm_only(spark):
     meta = idx.select("url_hash", "canon_url", "host", "warc_ts")
     winners = dedup_keep_first_agg(meta, "url_hash", ["warc_ts", "canon_url"], ["host"])
     frontier = classify_urls(winners).withColumn("priority", F.lit(1)).withColumn("retry_count", F.lit(0))
-    sched, _, _ = politeness_schedule(frontier, hosts)
+    sched = politeness_decide(frontier, hosts).filter(F.col("decision") == "scheduled")
     plan = plan_of(sched)
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     # html never enters the scheduling exchanges
     for frag in plan.split("Exchange")[1:]:
         assert "html" not in frag.split("\n")[0]
+
+
+@pytest.mark.parametrize("query", ["q32_extract_details", "q33_extract_text_identity"])
+def test_extraction_oracles_run_the_fused_stage(spark, query):
+    """q32/q33's byte-identity oracles must pin the extraction stage the
+    crawler runs — the one fused mapInPandas — not a per-field UDF."""
+    plan = plan_of(entry_mod.queries()[query](spark, SF_DIR))
+    assert "MapInPandas" in plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
 def test_dedup_agg_is_partial(spark):
