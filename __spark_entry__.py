@@ -73,11 +73,10 @@ def entry(spark: SparkSession) -> DataFrame:
         spark, pages, hosts,
         CrawlRunConfig(
             state_dir=tempfile.mkdtemp(prefix="pcrawler_entry_"),
-            # exercise the round-2 production knobs in the flagship run:
-            # partitioned-Bloom pending filter, epoch compaction, salted
-            # politeness rank (each also covered by dedicated equivalence
-            # tests — the flagship proves they compose)
-            bloom_min_seen=1,
+            # exercise the production knobs in the flagship run: epoch
+            # compaction and the salted politeness rank (each also covered
+            # by dedicated equivalence tests — the flagship proves they
+            # compose)
             compact_every=2,
             salted_rank_partitions=4,
         ),

@@ -1,6 +1,6 @@
 from .dedup import dedup_exact, dedup_keep_first, dedup_keep_last
 from .seen import anti_join_seen
-from .politeness import politeness_decide, salted_repartition
+from .politeness import politeness_decide
 from .export import export_contacts
 from .concomp import canonical_docs, connected_components
 
@@ -10,7 +10,6 @@ __all__ = [
     "dedup_keep_last",
     "anti_join_seen",
     "politeness_decide",
-    "salted_repartition",
     "export_contacts",
     "connected_components",
     "canonical_docs",

@@ -1,4 +1,4 @@
-"""Politeness scheduler + host-skew salting (SURVEY.md §2.10, §4).
+"""Politeness scheduler (SURVEY.md §2.10, §4).
 
 The reference's politeness is wall-clock sleeps inside each Celery worker
 (random 1-4s between requests, detail_crawler.py:28, contact_crawler.py:420;
@@ -16,10 +16,8 @@ reference's FIFO ``ORDER BY crawled_at`` batches (db_manager.py:176-178)
 with retry-demotion (tasks.py:204-268).
 
 Host skew: a Zipf frontier concentrates on mega-hosts.  The scheduler's
-defusal is ``politeness_decide(salted_rank_partitions=…)``;
-:func:`salted_repartition` spreads one host's rows over several partitions
-on a *salted* host key (salt factor from observed per-host counts) for
-stages that need it — no crawl plan calls it today.
+defusal is ``politeness_decide(salted_rank_partitions=…)``, a two-phase rank
+over (host, salt) groups that splits one host's sort across tasks.
 """
 
 from __future__ import annotations
@@ -188,33 +186,3 @@ def hosts_from_robots(robots: DataFrame, body_col: str = "robots_txt",
         F.col("_p.robots_disallow").alias("robots_disallow"),
         F.lit(default_max_parallel).alias("max_parallel"),
     )
-
-
-def salted_repartition(
-    df: DataFrame,
-    host_col: str = "host",
-    target_rows_per_partition: int = 20_000,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Repartition on (host, salt) where hot hosts get a per-host salt
-    fan-out proportional to their row count — defusing Zipf skew with a
-    single extra aggregate (cheap: count per host) + broadcast join."""
-    spark = df.sparkSession
-    counts = df.groupBy(host_col).count()
-    factors = counts.select(
-        host_col,
-        F.greatest(
-            F.lit(1), F.ceil(F.col("count") / F.lit(target_rows_per_partition))
-        ).cast("int").alias("_salt_factor"),
-    )
-    n = num_partitions or spark.sparkContext.defaultParallelism
-    out = (
-        df.join(F.broadcast(factors), on=host_col, how="left")
-        .withColumn(
-            "_salt",
-            F.pmod(F.xxhash64(F.col("url_hash"), F.lit(17)), F.coalesce("_salt_factor", F.lit(1))),
-        )
-        .repartition(n, F.col(host_col), F.col("_salt"))
-        .drop("_salt_factor", "_salt")
-    )
-    return out

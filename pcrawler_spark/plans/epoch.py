@@ -36,7 +36,7 @@ from ..functions.udfs import with_url_hash
 from .singlepass import classify_urls, fused_extract, kind_priority
 from ..operators.dedup import dedup_keep_first, dedup_keep_last
 from ..operators.politeness import politeness_decide
-from ..operators.seen import anti_join_seen, build_partitioned_bloom, seen_host_bucket_col
+from ..operators.seen import anti_join_seen
 from ..operators.export import export_contacts
 from .catalog import EpochCatalog
 
@@ -59,7 +59,6 @@ SEEN_SCHEMA = T.StructType([
     T.StructField("url_hash", T.LongType()),
     T.StructField("first_epoch", T.IntegerType()),
     T.StructField("reason", T.StringType()),      # fetched | disallowed | missing | gave_up
-    T.StructField("host_bucket", T.IntegerType()),  # pmod(xxhash64(host), N) — partitioned Bloom key
 ])
 
 
@@ -77,17 +76,6 @@ class CrawlRunConfig:
     # half-open (scheduled again)
     breaker_threshold: int = 3
     breaker_cooldown_epochs: int = 1
-    # pending = frontier ∖ seen: route the anti-join through the partitioned
-    # Bloom prefilter once the seen set is at least this big (the filter
-    # build costs one pass over `seen`, so tiny seen sets skip it);
-    # None disables the Bloom path entirely
-    bloom_min_seen: int | None = None
-    # rebuild the cached Bloom every k worked epochs (or after a compaction
-    # renumbers seen rows).  Between rebuilds the filter is reused — the
-    # steady-state epoch stays at 2 driver actions — and the seen rows
-    # committed since the build are covered by an exact anti-join against
-    # only those recent epochs (partition-pruned on the epoch column)
-    bloom_rebuild_epochs: int = 8
     # fetch-join strategy: the scheduled key set is broadcast onto the page
     # scan only while its row count stays under this bound — beyond it the
     # join falls back to a shuffle plan (or the bucketed page store at real
@@ -170,64 +158,13 @@ class CrawlEngine:
             out.append(e)
         return out
 
-    def _seen_count_estimate(self) -> int:
-        """Cumulative seen-set size from committed manifests (driver-side
-        JSON reads, no Spark action) — gates the Bloom prefilter."""
-        total = 0
-        for e in self.catalog.committed_epochs():
-            md = self.catalog.manifest(e).get("metadata", {})
-            total += int(md.get("seen_rows", 0))
-        return total
-
-    def _bloom_for(self, seen: DataFrame):
-        """Cached partitioned Bloom over ``seen`` (epoch column present).
-        Builds at most once per ``bloom_rebuild_epochs`` worked epochs — and
-        after a compaction, which renumbers seen rows so the whole set would
-        otherwise count as 'recent'.  Returns (bloom, recent_seen)."""
-        last = self.catalog.last_committed_epoch()
-        bloom = getattr(self, "_bloom", None)
-        compacted_since = bloom is not None and any(
-            self.catalog.manifest(e).get("metadata", {}).get("compaction")
-            for e in self.catalog.committed_epochs()
-            if e > bloom.built_upto_epoch
-        )
-        if (
-            bloom is None
-            or compacted_since
-            or last - bloom.built_upto_epoch >= self.cfg.bloom_rebuild_epochs
-        ):
-            if bloom is not None:
-                bloom.unpersist()
-            bloom = build_partitioned_bloom(
-                seen, candidates_have_host=True, built_upto_epoch=last)
-            self._bloom = bloom
-        recent = (
-            seen.filter(F.col("epoch") > bloom.built_upto_epoch)
-            if bloom.built_upto_epoch < last else None
-        )
-        return bloom, recent
-
     def _pending(self) -> DataFrame | None:
         frontier = self.catalog.read("frontier")
         if frontier is None:
             return None
         frontier = frontier.drop("epoch")
         seen = self.catalog.read("seen")
-        use_bloom = (
-            seen is not None
-            and self.cfg.bloom_min_seen is not None
-            and self._seen_count_estimate() >= self.cfg.bloom_min_seen
-        )
-        if seen is None:
-            pending = frontier
-        elif use_bloom:
-            bloom, recent = self._bloom_for(seen)
-            pending = anti_join_seen(
-                frontier, seen.drop("epoch"), bloom=bloom,
-                recent_seen=recent.drop("epoch") if recent is not None else None,
-            )
-        else:
-            pending = anti_join_seen(frontier, seen.drop("epoch"))
+        pending = frontier if seen is None else anti_join_seen(frontier, seen.drop("epoch"))
         # rediscovered urls keep one row; retried rows win (highest retry_count
         # → demoted in the politeness order), ties broken by earliest epoch
         return dedup_keep_last(pending, ["url_hash"], "retry_count", tiebreak=["epoch_added"])
@@ -320,11 +257,7 @@ class CrawlEngine:
         # a shuffle plan beyond the gate instead of OOMing on a giant
         # broadcast map; the 10^10-row page store is never shuffled either way
         att_sel = attempt.select(
-            "url_hash",
-            # kept (aliased: pages_idx also carries host) so 'missing' seen
-            # rows can stamp their host_bucket for the partitioned Bloom
-            F.col("host").alias("frontier_host"),
-            "kind", "url_type", "priority", "depth", "contact_depth",
+            "url_hash", "kind", "url_type", "priority", "depth", "contact_depth",
             F.col("industry").alias("seed_industry"),
             F.col("company_name").alias("seed_company_name"),
             "retry_count",
@@ -429,21 +362,18 @@ class CrawlEngine:
             gave_up = bumped.filter(F.col("retry_count") > cfgc.max_retries)
             new_frontier = new_frontier.unionByName(retries)
 
-        # seen = fetched ∪ disallowed ∪ missing ∪ gave_up (never re-scheduled);
-        # every row is stamped with its host bucket so the partitioned Bloom
-        # prefilter can build per-bucket filters without re-deriving hosts
-        def _seen(df: DataFrame, reason: str, host_col: str = "host") -> DataFrame:
+        # seen = fetched ∪ disallowed ∪ missing ∪ gave_up (never re-scheduled)
+        def _seen(df: DataFrame, reason: str) -> DataFrame:
             return df.select(
                 "url_hash",
                 F.lit(epoch).alias("first_epoch"),
                 F.lit(reason).alias("reason"),
-                seen_host_bucket_col(host_col).alias("host_bucket"),
             )
 
         seen_rows = (
             _seen(ext, "fetched")
             .unionByName(_seen(disallowed, "disallowed"))
-            .unionByName(_seen(missing, "missing", "frontier_host"))
+            .unionByName(_seen(missing, "missing"))
         )
         if gave_up is not None:
             seen_rows = seen_rows.unionByName(_seen(gave_up, "gave_up"))
@@ -462,9 +392,6 @@ class CrawlEngine:
             "failed_flaky": n_failed,
             "breaker_deferred": n_breaker_deferred,
             "records_out": n_records,
-            # seen_rows lower bound (gave_up rows excluded: their count is
-            # bounded by failed_flaky); used by the Bloom size gate
-            "seen_rows": n_fetched + n_disallowed + n_missing,
         }
         checkpoint = self.spark.createDataFrame(
             [(epoch, urls_pending, n_scheduled, n_deferred, n_disallowed,

@@ -301,6 +301,11 @@ def xlsx_to_dataframe(spark, path: str, schema=None):
     for col in pdf.columns:
         if pdf[col].isna().all():
             pdf[col] = pdf[col].astype("string")
+        elif pdf[col].map(lambda v: isinstance(v, str)).any():
+            # text beside numeric cells: Arrow cannot convert the mix, so
+            # every cell goes in as its str() text — the string column the
+            # row-by-row fallback inferred (84912345678.0 → '84912345678.0')
+            pdf[col] = pdf[col].map(lambda v: None if pd.isna(v) else str(v))
     return spark.createDataFrame(pdf)
 
 

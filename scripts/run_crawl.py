@@ -46,7 +46,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--epoch-seconds", type=float, default=60.0)
     p.add_argument("--max-epochs", type=int, default=50)
     p.add_argument("--compact-every", type=int, default=None)
-    p.add_argument("--bloom-min-seen", type=int, default=None)
     p.add_argument("--salted-rank-partitions", type=int, default=None)
     args = p.parse_args(argv)
 
@@ -83,7 +82,6 @@ def main(argv: list[str] | None = None) -> int:
         epoch_seconds=args.epoch_seconds,
         max_epochs=args.max_epochs,
         compact_every=args.compact_every,
-        bloom_min_seen=args.bloom_min_seen,
         salted_rank_partitions=args.salted_rank_partitions,
     )
     engine = CrawlEngine(spark, pages, hosts, cfg)

@@ -1,4 +1,4 @@
-"""Crawl-ordering parity invariants + Bloom-prefilter equivalence.
+"""Crawl-ordering parity invariants.
 
 The north_rule requires "matching the reference's crawl ordering ... under
 the same seed list and politeness budget".  The reference's ordering
@@ -13,7 +13,6 @@ re-simulation needed.
 import pytest
 from pyspark.sql import functions as F
 
-from pcrawler_spark.operators.seen import anti_join_seen
 from pcrawler_spark.plans import CrawlEngine, CrawlRunConfig
 from pcrawler_spark.sources.synthetic import SyntheticCrawlConfig, generate_crawl_corpus
 
@@ -106,71 +105,3 @@ def test_priority_fifo_within_host(engine_run):
                     violations.append((host, pr, x["url_hash"], y["url_hash"]))
     assert not violations, violations[:5]
 
-
-def test_bloom_prefilter_equivalence(spark):
-    """anti_join_seen with and without the Bloom pre-pass agree exactly."""
-    cand = spark.range(0, 5000).select(F.xxhash64("id").alias("url_hash"), F.col("id"))
-    seen = spark.range(0, 5000, 3).select(F.xxhash64("id").alias("url_hash"))
-    plain = anti_join_seen(cand, seen)
-    bloom = anti_join_seen(cand, seen, use_bloom=True)
-    a = sorted(r.id for r in plain.collect())
-    b = sorted(r.id for r in bloom.collect())
-    assert a == b
-    assert len(a) == len([i for i in range(5000) if i % 3 != 0])
-
-
-def test_bloom_partitioned_host_buckets(spark):
-    """Host-bucketed path: seen carries host_bucket, candidates carry host;
-    per-bucket filters agree exactly with the plain anti-join, and only the
-    buckets referenced by candidates are built."""
-    from pcrawler_spark.operators.seen import seen_host_bucket_col
-
-    hosts = [f"h{i}.vn" for i in range(20)]
-    cand = (
-        spark.range(0, 4000)
-        .select(
-            F.xxhash64("id").alias("url_hash"),
-            F.col("id"),
-            F.concat(F.lit("h"), (F.col("id") % 20).cast("string"), F.lit(".vn")).alias("host"),
-        )
-    )
-    seen = (
-        spark.range(0, 4000, 3)
-        .select(
-            F.xxhash64("id").alias("url_hash"),
-            F.concat(F.lit("h"), (F.col("id") % 20).cast("string"), F.lit(".vn")).alias("host"),
-        )
-        .withColumn("host_bucket", seen_host_bucket_col("host"))
-        .drop("host")
-    )
-    plain = anti_join_seen(cand, seen)
-    bloom = anti_join_seen(cand, seen, use_bloom=True)
-    assert sorted(r.id for r in plain.collect()) == sorted(r.id for r in bloom.collect())
-
-
-def test_bloom_engine_knob(spark, tmp_path):
-    """CrawlRunConfig.bloom_min_seen routes _pending through the Bloom path
-    (round-1 gap: the tested Bloom was unreachable from production runs);
-    the run's final state is identical to the exact-anti-join run."""
-    corpus = generate_crawl_corpus(CFG)
-    pages = spark.createDataFrame(
-        corpus["pages"], "url string, warc_ts timestamp, html binary, text string, lang string"
-    )
-    hosts = spark.createDataFrame(
-        corpus["hosts"],
-        "host string, crawl_delay_s double, robots_disallow array<string>, max_parallel int",
-    )
-    seeds = spark.createDataFrame(corpus["seeds"], "url string, priority int, industry string")
-    runs = {}
-    for name, bloom_min in (("exact", None), ("bloom", 1)):
-        engine = CrawlEngine(
-            spark, pages, hosts,
-            CrawlRunConfig(state_dir=str(tmp_path / name), epoch_seconds=120.0,
-                           bloom_min_seen=bloom_min),
-        )
-        engine.run(seeds)
-        runs[name] = sorted(
-            r.url_hash for r in engine.seen().select("url_hash").collect()
-        )
-    assert runs["exact"] == runs["bloom"]
-    assert len(runs["exact"]) > 0

@@ -1,6 +1,8 @@
 """Round-2 operator tests: SimHash exact-recall banding, Jaccard hot-shingle
 cap, the F5 html-length gate, and the X11 error-URL heuristic."""
 
+import contextlib
+import io
 import itertools
 
 from pyspark.sql import functions as F
@@ -255,7 +257,9 @@ def test_compaction_preserves_state_and_bounds_dirs(spark, tmp_path):
 def test_epoch_job_discipline(spark, tmp_path, count_actions):
     """One epoch performs exactly 2 driver-side metric actions (round 1 ran
     8 separate count jobs per epoch): one groupBy('decision') collect and
-    one groupBy('kind') collect — no .count()/.toPandas() anywhere."""
+    one groupBy('kind') collect — no .count()/.toPandas() anywhere.  Holds
+    for the first epoch (no seen set yet) and for a steady-state epoch,
+    whose pending set is one JVM-only left-anti join against seen."""
     cfg = SyntheticCrawlConfig(n_companies=30, n_industries=2, n_hosts=5)
     corpus, pages, hosts, seeds = _spark_corpus(spark, cfg)
     engine = CrawlEngine(
@@ -266,6 +270,16 @@ def test_epoch_job_discipline(spark, tmp_path, count_actions):
     engine.init_frontier(seeds)
     calls = count_actions()
     assert engine.run_epoch(1) is not None
+    assert calls == {"collect": 2, "count": 0, "toPandas": 0}
+
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        engine._pending().explain("formatted")
+    plan = buf.getvalue()
+    assert "LeftAnti" in plan, plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
+    calls.update(dict.fromkeys(calls, 0))
+    assert engine.run_epoch(2) is not None
     assert calls == {"collect": 2, "count": 0, "toPandas": 0}
 
 
