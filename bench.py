@@ -95,6 +95,17 @@ def ensure_corpus(spark, n_companies: int) -> str:
     return path
 
 
+def ensure_training_docs(spark, n_docs: int) -> str:
+    """Generate (once, cached as parquet) the training-pipeline corpus: doc
+    text is a pure function of doc_id (sources/trainingdocs.py)."""
+    from pcrawler_spark.sources.trainingdocs import generate_training_docs
+
+    path = os.path.join(REPO, ".bench", f"training_docs_{n_docs}")
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        generate_training_docs(spark, n_docs).write.mode("overwrite").parquet(path)
+    return path
+
+
 def hosts_df(spark, n_companies: int):
     from pcrawler_spark.sources.synthetic import SyntheticCrawlConfig, _hosts_rows
     import pandas as pd
@@ -482,13 +493,10 @@ def time_training_pipeline(spark) -> float:
     headline queries so a stage-fusion regression shows up in the graded
     artifact (round-5 judge item #7).  Cold-cache fallback generates the
     corpus distributed (pure function of doc_id)."""
-    sys.path.insert(0, os.path.join(REPO, "scripts"))
-    import bench_training_scaling as bts
-
     from pcrawler_spark.plans.training import training_pipeline
 
     n_docs = int(os.environ.get("SPARK_GRAFT_BENCH_TRAIN_DOCS", "240000"))
-    docs = spark.read.parquet(bts.ensure_corpus(spark, n_docs))
+    docs = spark.read.parquet(ensure_training_docs(spark, n_docs))
     # warm (codegen, parquet footers): gate-only pass
     training_pipeline(docs, quality_min=0, near_dedup=False).count()
     spark._jvm.System.gc()

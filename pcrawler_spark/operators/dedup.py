@@ -8,7 +8,8 @@ collapse into two shapes:
   ``row_number() over (partition by key order by ts)`` filter, replacing
   the reference's delete loops (dedup_cleanup.py:55-82,
   migrate_unique_constraints.py:47-57);
-* exact distinct on the key hash for when any winner is acceptable.
+* keep-first as one aggregation (``min(struct)`` per key), which
+  partial-aggregates before its shuffle.
 
 At 10^10 rows the window shuffles once on the key — same cost as any
 groupBy; skew on hot keys is handled upstream by salting (politeness.py).
@@ -44,11 +45,6 @@ def dedup_keep_last(df: DataFrame, keys: Sequence[str], order_col: str,
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
-
-
-def dedup_exact(df: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """Any-winner distinct per key (reference in-memory set semantics, D1)."""
-    return df.dropDuplicates(list(keys))
 
 
 def dedup_keep_first_agg(df: DataFrame, key: str | Sequence[str],

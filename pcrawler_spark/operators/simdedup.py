@@ -170,19 +170,6 @@ def _minhash_wide(df: DataFrame, n_hashes: int, id_col: str, text_col: str,
     return sh.groupBy("doc").agg(*aggs)
 
 
-def minhash_signatures(df: DataFrame, n_hashes: int = 8,
-                       id_col: str = "doc_id", text_col: str = "text",
-                       n: int = 3) -> DataFrame:
-    """doc → (seed, minhash) rows using the portable md5-derived affine
-    hash family (see :data:`_MH_P`)."""
-    wide = _minhash_wide(df, n_hashes, id_col, text_col, n)
-    pairs = F.explode(F.array(*[
-        F.struct(F.lit(s).alias("seed"), F.col(f"_mh_{s}").alias("minhash"))
-        for s in range(n_hashes)
-    ])).alias("_p")
-    return wide.select("doc", pairs).select("doc", "_p.seed", "_p.minhash")
-
-
 def minhash_bands(df: DataFrame, n_hashes: int = 8, band_rows: int = 2,
                   id_col: str = "doc_id", text_col: str = "text",
                   n: int = 3, pre_repartition: bool = True) -> DataFrame:

@@ -23,10 +23,6 @@ EN_MARKERS = ("the", "a", "of", "and", "is")
 VI_MARKERS = ("và", "của", "là", "các", "cho")
 
 
-def with_tokens(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return df.withColumn("tokens", F.split(F.trim(F.col(text_col)), " "))
-
-
 def token_count(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn(
         "n_tokens", F.size(F.split(F.trim(F.col(text_col)), " ")).cast("long")

@@ -13,9 +13,10 @@ Scale notes (10^10-URL design point):
   mutation ever (S10 → append-only; SURVEY.md §7.4.5).
 * the scheduled set per epoch is budget-bounded by politeness.  The fetch
   join broadcasts it onto the page store only while it is at most
-  ``broadcast_max_scheduled`` rows, and otherwise leaves the join to a
+  ``_BROADCAST_MAX_SCHEDULED`` rows, and otherwise leaves the join to a
   shuffle plan; on a bucketed page store the keys shuffle into the bucket
-  layout instead and nothing is broadcast.
+  layout instead (``pagestore.fetch_join_bucketed``) and nothing is
+  broadcast.
 * extraction is ONE fused Arrow pass (``singlepass.fused_extract``) over
   the fetch join's output partitions, with no repartition before it.
 * a deterministic "flaky fetch" simulator exercises the retry path
@@ -39,6 +40,13 @@ from ..operators.politeness import politeness_decide
 from ..operators.seen import anti_join_seen
 from ..operators.export import export_contacts
 from .catalog import EpochCatalog
+from .pagestore import fetch_join_bucketed
+
+# fetch-join strategy: the scheduled key set is broadcast onto the page scan
+# only while its row count stays under this bound — beyond it the join falls
+# back to a shuffle plan (or the bucketed page store at real scale) instead
+# of OOMing the executors with a giant broadcast map
+_BROADCAST_MAX_SCHEDULED = 4_000_000
 
 FRONTIER_SCHEMA = T.StructType([
     T.StructField("url_hash", T.LongType()),
@@ -76,11 +84,6 @@ class CrawlRunConfig:
     # half-open (scheduled again)
     breaker_threshold: int = 3
     breaker_cooldown_epochs: int = 1
-    # fetch-join strategy: the scheduled key set is broadcast onto the page
-    # scan only while its row count stays under this bound — beyond it the
-    # join falls back to a shuffle plan (or the bucketed page store at real
-    # scale) instead of OOMing the executors with a giant broadcast map
-    broadcast_max_scheduled: int = 4_000_000
     # best-first deep email crawl (email_extractor.py:149-225): follow
     # keyword-scored links from contact landing pages up to this depth
     # (0 disables frontier expansion from contact pages)
@@ -263,15 +266,12 @@ class CrawlEngine:
             "retry_count",
         )
         if self.bucketed:
-            # bucketed store: keys shuffle into the bucket layout; the wide
-            # side streams from its bucketed scan (no broadcast, no pages
-            # exchange) regardless of the schedule size
-            att_join = att_sel.hint("shuffle_hash")
-        elif n_scheduled <= cfgc.broadcast_max_scheduled:
-            att_join = F.broadcast(att_sel)
+            # no broadcast and no pages exchange, whatever the schedule size
+            fetched = fetch_join_bucketed(self.pages_idx, att_sel)
         else:
-            att_join = att_sel
-        fetched = self.pages_idx.join(att_join, on="url_hash", how="inner")
+            att_join = (F.broadcast(att_sel) if n_scheduled <= _BROADCAST_MAX_SCHEDULED
+                        else att_sel)
+            fetched = self.pages_idx.join(att_join, on="url_hash", how="inner")
         # ONE fused Arrow pass: shared DOM parse feeds detail/email/link/text
         # kernels per url kind; frontier metadata rides through as passthrough
         ext = fused_extract(

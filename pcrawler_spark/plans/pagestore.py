@@ -90,12 +90,10 @@ def register_bucketed_pages(spark: SparkSession, table_name: str, path: str,
     )
 
 
-def fetch_join_bucketed(spark: SparkSession, table_name: str,
-                        keys: DataFrame) -> DataFrame:
+def fetch_join_bucketed(pages: DataFrame, keys: DataFrame) -> DataFrame:
     """Fetch = bucketed pages ⋈ scheduled keys with the pages side unmoved:
     the join key IS the bucket column, so only the (tiny) keys side shuffles
     into the bucket layout.  The SHUFFLE_HASH hint keeps the bucketed side
-    streaming (no sort of wide rows, no broadcast)."""
-    pages = spark.table(table_name)
-    return pages.join(keys.select("url_hash").hint("shuffle_hash"),
-                      on="url_hash", how="inner")
+    streaming (no sort of wide rows, no broadcast).  ``pages`` is a scan of
+    the bucketed table; every ``keys`` column rides through the join."""
+    return pages.join(keys.hint("shuffle_hash"), on="url_hash", how="inner")

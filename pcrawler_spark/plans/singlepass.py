@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from ..functions.udfs import with_url_hash
 from ..operators.dedup import dedup_keep_first_agg
 from ..operators.politeness import politeness_decide
+from .pagestore import fetch_join_bucketed
 
 EXTRACT_ALL_SCHEMA = (
     "url_hash long, canon_url string, kind string, url_type string, "
@@ -228,5 +229,4 @@ def schedule_and_extract_bucketed(
         epoch_seconds=epoch_seconds, directory_host=directory_host,
     )
     keys = decided.filter(F.col("decision") == "scheduled").select("url_hash")
-    fetched = pages.join(keys.hint("shuffle_hash"), on="url_hash", how="inner")
-    return fused_extract(classify_urls(fetched, directory_host))
+    return fused_extract(classify_urls(fetch_join_bucketed(pages, keys), directory_host))

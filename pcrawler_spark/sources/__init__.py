@@ -1,11 +1,10 @@
 from .synthetic import SyntheticCrawlConfig, generate_crawl_corpus, pages_spark_df
-from .tables import load_table, load_tables, TESTDATA_TABLES
+from .tables import load_table, TESTDATA_TABLES
 
 __all__ = [
     "SyntheticCrawlConfig",
     "generate_crawl_corpus",
     "pages_spark_df",
     "load_table",
-    "load_tables",
     "TESTDATA_TABLES",
 ]

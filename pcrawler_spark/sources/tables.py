@@ -16,7 +16,3 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR, names=TESTDATA_TABLES) -> dict[str, DataFrame]:
-    return {n: load_table(spark, n, sf_dir) for n in names}

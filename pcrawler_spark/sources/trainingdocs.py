@@ -1,4 +1,4 @@
-"""Deterministic synthetic training-doc corpus (bench/scaling evidence).
+"""Deterministic synthetic training-doc corpus (bench.py's training pipeline).
 
 Lives inside the package (not scripts/) so the mapInPandas closure below is
 pickled by reference to a module every executor can import from the shipped

@@ -159,7 +159,7 @@ def test_bucketed_pagestore_no_broadcast_no_pages_shuffle(spark, tmp_path):
         .union(spark.range(5).select(F.xxhash64("id").alias("url_hash")))
     )
     n_expected = keys.count() - 5
-    joined = fetch_join_bucketed(spark, "bucketed_pages_test", keys)
+    joined = fetch_join_bucketed(spark.table("bucketed_pages_test"), keys)
     plan = plan_of(joined)
     assert "BroadcastHashJoin" not in plan and "BroadcastExchange" not in plan
     assert "ShuffledHashJoin" in plan or "SortMergeJoin" in plan

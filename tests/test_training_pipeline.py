@@ -1,8 +1,12 @@
 """The packaged composed pipeline (plans/training.py)."""
 
+import os
+
 from pyspark.sql import functions as F
 
+import bench
 from pcrawler_spark.plans.training import training_pipeline
+from pcrawler_spark.sources import trainingdocs
 
 
 def _docs(spark):
@@ -78,3 +82,17 @@ def test_crawl_to_training_data_end_to_end(spark):
     again = training_pipeline(
         out.select("doc_id", "text"), quality_min=0)
     assert again.count() == n_out
+
+
+def test_bench_training_docs_cold_start(spark, tmp_path, monkeypatch):
+    """bench.py builds its training corpus from a cold cache with the
+    package's generator alone, and a second call reuses the cached copy."""
+    monkeypatch.setattr(bench, "REPO", str(tmp_path))
+    path = bench.ensure_training_docs(spark, 300)
+    rows = spark.read.parquet(path).collect()
+    assert sorted(r["doc_id"] for r in rows) == list(range(300))
+    assert all(r["text"] == trainingdocs._doc_text(r["doc_id"]) for r in rows)
+    marker = os.path.join(path, "_SUCCESS")
+    mtime = os.stat(marker).st_mtime_ns
+    assert bench.ensure_training_docs(spark, 300) == path
+    assert os.stat(marker).st_mtime_ns == mtime
