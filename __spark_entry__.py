@@ -9,8 +9,7 @@ SURVEY.md §2 (+ the training-data operators) to a (spark, sf_dir) callable
 over the driver testdata; ``oracle_sql()`` supplies the DuckDB-equivalent
 ANSI SQL.  Column names and rounding are aligned between both sides; doubles
 are rounded before ranking/limits so top-k selections agree across engines.
-Crawl-pipeline queries whose input is the synthetic pages table (not
-testdata) have no SQL oracle → rows-only checks.
+Every query has an oracle (tests/test_oracle_parity.py checks both sets).
 """
 
 from __future__ import annotations
@@ -408,8 +407,8 @@ def q27_neardup_stream(spark, sf):
     is fixed) through the real foreachBatch exactly-once pipeline; the
     oracle (_q27_stream_sql) replays the same sequential fold in SQL —
     per-batch in-batch collisions + probes against the accumulated
-    ORIGINALS-only band store.  The one-shot batch pair SQL lives on
-    inside q51's oracle, so minhash_lsh_candidates stays hash-checked."""
+    ORIGINALS-only band store.  The one-shot band-clique pair SQL lives on
+    in q51's and q52's oracles, whose closures check their star edges."""
     import glob as _glob
     import shutil
     import time as _time
@@ -498,18 +497,19 @@ def q42_cosine_near_pairs(spark, sf):
 
 def q51_dedup_clusters(spark, sf):
     """Near-dup PAIRS → dedup GROUPS: union of the q26 jaccard pairs and
-    q27 minhash-band pairs, clustered with alternating large-star /
-    small-star connected components (operators/concomp.py — O(log^2) rounds,
-    the 100 TB shape); each doc labeled with its component's min doc_id.
-    The oracle recomputes the same edge set in SQL and labels via a
-    recursive transitive closure."""
+    the MinHash-LSH star edges training_pipeline runs, clustered with
+    alternating large-star / small-star connected components
+    (operators/concomp.py — O(log^2) rounds, the 100 TB shape); each doc
+    labeled with its component's min doc_id.  The oracle recomputes the
+    jaccard ∪ band-clique pairs (same closure as the star edges) in SQL
+    and labels via a recursive transitive closure."""
     from pcrawler_spark.operators.concomp import connected_components
     from pcrawler_spark.operators.simdedup import (
-        minhash_lsh_candidates, ngram_jaccard_pairs)
+        minhash_lsh_star_edges, ngram_jaccard_pairs)
 
     d = _t(spark, sf, "documents").filter(F.col("doc_id") < 500)
     jac = ngram_jaccard_pairs(d, threshold=0.12, max_shingle_df=100)
-    mh = minhash_lsh_candidates(d, n_hashes=8, band_rows=2)
+    mh = minhash_lsh_star_edges(d, n_hashes=8, band_rows=2)
     pairs = jac.select("doc_a", "doc_b").unionByName(mh.select("doc_a", "doc_b"))
     return connected_components(pairs, src="doc_a", dst="doc_b")
 
@@ -661,27 +661,17 @@ def q62_token_budget_mix(spark, sf):
 
 
 def q52_training_pipeline(spark, sf):
-    """The composed LLM-training-data pipeline, end-to-end in one job:
-    quality gate (floor-ppm score ≥ 450000) → lang ID annotate → exact
-    dedup (keep min doc_id per normalized-text fingerprint, groupBy+semi —
-    no window sort) → near-dup canonical (drop non-root members of the q51
-    connected components) → (doc_id, lang_pred, quality_ppm, n_tokens).
-    Every stage is an already-oracled operator; the oracle recomposes them
-    in SQL, embedding the q51 recursive closure for the cluster stage."""
-    from pcrawler_spark.operators.textstats import (
-        fingerprint, lang_id, quality_score, token_count)
+    """The product's LLM-training-data pipeline (plans/training.py, as
+    entry() and bench.py run it) at the 450000-ppm gate → (doc_id,
+    lang_pred, quality_ppm, n_tokens).  documents has no natural exact
+    dups, so both engines re-append doc_id%10==0 with offset ids (as q25
+    does) to pin the dedup stage; the oracle replays every stage in SQL."""
+    from pcrawler_spark.plans.training import training_pipeline
 
-    d = _t(spark, sf, "documents").filter(F.col("doc_id") < 500)
-    ann = token_count(lang_id(quality_score(fingerprint(d))))
-    passed = ann.filter(F.col("quality_ppm") >= 450000)
-    keep = passed.groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
-    kept = passed.join(keep, ["fp", "doc_id"], "left_semi")
-    noncanon = (
-        q51_dedup_clusters(spark, sf)
-        .filter(F.col("id") != F.col("component"))
-        .select(F.col("id").alias("doc_id"))
-    )
-    return kept.join(noncanon, "doc_id", "left_anti").select(
+    d = _t(spark, sf, "documents").filter(F.col("doc_id") < 500).select(
+        "doc_id", "text")
+    dup = d.filter(F.col("doc_id") % 10 == 0).withColumn("doc_id", F.col("doc_id") + 1_000_000)
+    return training_pipeline(d.unionByName(dup), quality_min=450000).select(
         F.col("doc_id").cast("long").alias("doc_id"),
         "lang_pred",
         F.col("quality_ppm").cast("long").alias("quality_ppm"),
@@ -1094,7 +1084,7 @@ def q41_checkpoint_completeness(spark, sf):
 
 
 # --------------------------------------------------------------------------
-# crawl-pipeline queries (synthetic pages input → rows-only checks)
+# crawl-pipeline queries (synthetic pages input → fixture-backed oracles)
 # --------------------------------------------------------------------------
 
 def _synthetic_pages(spark):
@@ -1345,10 +1335,40 @@ def _simhash_sql(max_doc: int, max_hamming: int) -> str:
     """
 
 
+def _annotate_ctes(src: str) -> str:
+    """CTEs ``txt`` (per-doc counts) and ``ann`` (+ lang_pred, quality_ppm)
+    over ``src`` (doc_id, text): textstats' quality_score, lang_id and
+    token_count, for the q23 and q52 oracles."""
+    return f"""txt AS (
+              SELECT doc_id, text,
+                     LENGTH(text) AS n_chars,
+                     LENGTH(text) - LENGTH(regexp_replace(text, '[.,!?;:]', '', 'g')) AS n_punct,
+                     len(string_split(trim(text), ' ')) AS n_tokens,
+                     len(list_filter(string_split(trim(text), ' '),
+                         x -> lower(x) IN ('the','a','of','and','is'))) AS n_stop,
+                     len(list_filter(string_split(lower(trim(text)), ' '),
+                         x -> x IN ('the','a','of','and','is'))) AS en,
+                     len(list_filter(string_split(lower(trim(text)), ' '),
+                         x -> x IN ('và','của','là','các','cho'))) AS vi
+              FROM {src}
+            ),
+            ann AS (
+              SELECT *,
+                     CASE WHEN en > vi THEN 'en' WHEN vi > en THEN 'vi' ELSE 'unknown' END AS lang_pred,
+                     CAST(FLOOR(500000.0 * n_stop / GREATEST(n_tokens, 1))
+                        + FLOOR(300000.0 * (n_chars - n_punct) / GREATEST(n_chars, 1))
+                        + LEAST(400 * n_chars, 200000) AS BIGINT) AS quality_ppm
+              FROM txt
+            )"""
+
+
+# the q26/q51 document slice, rendered into the shingle CTE's FROM
+_DOCS_500 = "documents WHERE doc_id < 500"
+
 _SHINGLE_CTE = """
     w AS (
       SELECT doc_id AS doc, string_split(trim(text), ' ') AS words
-      FROM documents WHERE doc_id < {max_doc}
+      FROM {src}
     ), sh AS (
       SELECT doc, list_distinct([
         array_to_string(words[i:i+2], ' ')
@@ -1359,13 +1379,14 @@ _SHINGLE_CTE = """
 """
 
 
-def _mh_bands_sql(max_doc: int) -> str:
-    """CTE chain ending in per-doc LSH band rows (doc, band, mh_0, mh_1):
-    ONE md5 per shingle, k affine per-seed hashes (simdedup._MH_P family),
-    8 hashes × 2-row bands — replays operators/simdedup.py minhash_bands
-    exactly.  Shared by the batch pair SQL (q51's edge set) and the
-    streaming fold replay (q27)."""
-    return f"""{_SHINGLE_CTE.format(max_doc=max_doc)},
+def _mh_bands_sql(src: str) -> str:
+    """CTE chain ending in per-doc LSH band rows (doc, band, mh_0, mh_1)
+    over the relation ``src`` (doc_id, text): ONE md5 per shingle, k affine
+    per-seed hashes (simdedup._MH_P family), 8 hashes × 2-row bands —
+    replays operators/simdedup.py minhash_bands exactly.  Shared by the
+    band-clique pair SQL (q51's and q52's edge sets) and the streaming fold
+    replay (q27)."""
+    return f"""{_SHINGLE_CTE.format(src=src)},
             inv AS (SELECT doc, unnest(shingles) AS shingle FROM sh),
             h0 AS (
               SELECT doc,
@@ -1387,15 +1408,31 @@ def _mh_bands_sql(max_doc: int) -> str:
             )"""
 
 
-# the one-shot batch candidate-pair SQL (minhash_lsh_candidates): no longer
-# a registry slot of its own — q51 embeds it for its edge set, so the batch
-# pair math stays driver-hash-checked there
-_Q27_PAIRS_SQL = f"""
-            WITH {_mh_bands_sql(500)}
+def _mh_pairs_sql(src: str) -> str:
+    """The band-clique pairs (minhash_lsh_candidates) over ``src``: the same
+    transitive closure as the star edges q51 and q52 run."""
+    return f"""
+            WITH {_mh_bands_sql(src)}
             SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
             FROM bands a JOIN bands b USING (band, mh_0, mh_1)
             WHERE a.doc < b.doc
         """
+
+
+def _closure_ctes(*pairs: str) -> str:
+    """Recursive CTEs ending in ``reach(id, n)``: every node of the union
+    of the (doc_a, doc_b) ``pairs`` queries, taken as undirected, with
+    every node it reaches.  MIN(n) per id is its component's min id — the
+    label connected_components assigns."""
+    edges = "\n            UNION\n            ".join(
+        f"SELECT doc_a AS u, doc_b AS v FROM ({p})" for p in pairs)
+    return f"""e0 AS ({edges}),
+        edges2 AS (SELECT u, v FROM e0 UNION SELECT v AS u, u AS v FROM e0),
+        reach(id, n) AS (
+            SELECT u AS id, u AS n FROM edges2
+            UNION
+            SELECT e.u AS id, r.n FROM edges2 e JOIN reach r ON e.v = r.id
+        )"""
 
 
 def _q27_stream_sql(n_batches: int = 4, batch: int = 125) -> str:
@@ -1434,7 +1471,7 @@ def _q27_stream_sql(n_batches: int = 4, batch: int = 125) -> str:
     )
     joined = ",\n            ".join(parts)
     return f"""
-            WITH {_mh_bands_sql(n_batches * batch)},
+            WITH {_mh_bands_sql(f"documents WHERE doc_id < {n_batches * batch}")},
             {joined},
             fl AS ({flagged})
             SELECT d.doc_id, fl.dup_of IS NOT NULL AS is_dup, fl.dup_of
@@ -2273,22 +2310,10 @@ def oracle_sql() -> dict[str, str]:
             FROM (SELECT lang, len(string_split(trim(text), ' ')) AS n_tokens FROM documents)
             GROUP BY lang
         """,
-        "q23_quality_lang": """
-            WITH t AS (
+        "q23_quality_lang": f"""
+            WITH {_annotate_ctes("documents")},
+            gr AS (
               SELECT doc_id, lang,
-                     LENGTH(text) AS n_chars,
-                     LENGTH(text) - LENGTH(regexp_replace(text, '[.,!?;:]', '', 'g')) AS n_punct,
-                     len(string_split(trim(text), ' ')) AS n_tokens,
-                     len(list_filter(string_split(trim(text), ' '),
-                         x -> lower(x) IN ('the','a','of','and','is'))) AS n_stop,
-                     len(list_filter(string_split(lower(trim(text)), ' '),
-                         x -> x IN ('the','a','of','and','is'))) AS en,
-                     len(list_filter(string_split(lower(trim(text)), ' '),
-                         x -> x IN ('và','của','là','các','cho'))) AS vi
-              FROM documents
-            )
-            , gr AS (
-              SELECT doc_id,
                      len(string_split(trim(text), ' ')) AS n_words,
                      list_sum(list_transform(string_split(trim(text), ' '),
                               w -> length(w))) AS sum_len,
@@ -2304,7 +2329,7 @@ def oracle_sql() -> dict[str, str]:
               FROM documents
             ),
             g2 AS (
-              SELECT doc_id, CAST(n_words AS BIGINT) AS n_words,
+              SELECT doc_id, lang, CAST(n_words AS BIGINT) AS n_words,
                      CAST(FLOOR(1000000.0 * sum_len / GREATEST(n_words, 1))
                           AS BIGINT) AS mean_word_len_ppm,
                      CAST(FLOOR(1000000.0 * n_alpha / GREATEST(n_words, 1))
@@ -2328,18 +2353,14 @@ def oracle_sql() -> dict[str, str]:
                        AS fail_reasons
               FROM g2
             )
-            SELECT t.doc_id, lang,
-                   CASE WHEN en > vi THEN 'en' WHEN vi > en THEN 'vi' ELSE 'unknown' END AS lang_pred,
+            SELECT ann.doc_id, g3.lang, lang_pred,
                    CAST(FLOOR(1000000.0 * n_punct / GREATEST(n_chars, 1)) AS BIGINT) AS punct_ppm,
                    CAST(FLOOR(1000000.0 * n_stop / GREATEST(n_tokens, 1)) AS BIGINT) AS stopword_ppm,
-                   CAST(FLOOR(500000.0 * n_stop / GREATEST(n_tokens, 1))
-                      + FLOOR(300000.0 * (n_chars - n_punct) / GREATEST(n_chars, 1))
-                      + LEAST(400 * n_chars, 200000) AS BIGINT) AS quality_ppm,
-                   g3.n_words, g3.mean_word_len_ppm, g3.alpha_word_ppm,
+                   quality_ppm, g3.n_words, g3.mean_word_len_ppm, g3.alpha_word_ppm,
                    g3.symbol_ppm, g3.stop_hits, g3.fail_reasons,
                    CAST(CASE WHEN g3.fail_reasons = '' THEN 1 ELSE 0 END
                         AS BIGINT) AS passed
-            FROM t JOIN g3 ON t.doc_id = g3.doc_id
+            FROM ann JOIN g3 ON ann.doc_id = g3.doc_id
         """,
         "q25_fingerprint_dups": """
             WITH all_docs AS (
@@ -2352,7 +2373,7 @@ def oracle_sql() -> dict[str, str]:
             FROM all_docs GROUP BY 1 HAVING COUNT(*) > 1
         """,
         "q26_ngram_jaccard": f"""
-            WITH {_SHINGLE_CTE.format(max_doc=500)},
+            WITH {_SHINGLE_CTE.format(src=_DOCS_500)},
             sizes AS (SELECT doc, len(shingles) AS n_sh FROM sh),
             inv0 AS (SELECT doc, unnest(shingles) AS shingle FROM sh),
             inv AS (
@@ -3090,63 +3111,39 @@ def oracle_sql() -> dict[str, str]:
 
 
 def _finalize_oracles(d: dict[str, str]) -> dict[str, str]:
-    """Oracles composed from other oracles.  q51 re-derives the SAME edge
-    set as the Spark side (q26 jaccard pairs ∪ q27 minhash-band pairs) by
-    embedding those two oracles as subqueries, then labels every node with
-    the minimum reachable node id via a recursive transitive closure — an
-    exact, independent re-statement of connected components that DuckDB can
-    evaluate at oracle scale (the Spark side uses large-star/small-star,
-    which a recursive CTE cannot express but closure subsumes)."""
+    """Oracles composed from other oracles.  q51 clusters the q26 jaccard
+    pairs ∪ the band-clique pairs; q52 replays training_pipeline (annotate,
+    gate, keep the min doc_id per fingerprint, band-clique pairs over the
+    KEPT docs only).  Both label nodes via the recursive transitive closure
+    — an exact, independent re-statement of connected components (the
+    Spark side's large-star/small-star, which a recursive CTE cannot
+    express but closure subsumes) that DuckDB evaluates at oracle scale."""
     d["q51_dedup_clusters"] = f"""
         WITH RECURSIVE
-        e0 AS (
-            SELECT doc_a AS u, doc_b AS v
-            FROM ({d['q26_ngram_jaccard']})
-            UNION
-            SELECT doc_a AS u, doc_b AS v
-            FROM ({_Q27_PAIRS_SQL})
-        ),
-        edges2 AS (SELECT u, v FROM e0 UNION SELECT v AS u, u AS v FROM e0),
-        reach(id, n) AS (
-            SELECT u AS id, u AS n FROM edges2
-            UNION
-            SELECT e.u AS id, r.n FROM edges2 e JOIN reach r ON e.v = r.id
-        )
+        {_closure_ctes(d['q26_ngram_jaccard'], _mh_pairs_sql(_DOCS_500))}
         SELECT CAST(id AS BIGINT) AS id, CAST(MIN(n) AS BIGINT) AS component
         FROM reach GROUP BY id
     """
     d["q52_training_pipeline"] = f"""
-        WITH ann AS (
-            SELECT doc_id,
-                   CASE WHEN len(list_filter(string_split(lower(trim(text)), ' '),
-                                 x -> x IN ('the','a','of','and','is')))
-                      > len(list_filter(string_split(lower(trim(text)), ' '),
-                                 x -> x IN ('và','của','là','các','cho'))) THEN 'en'
-                        WHEN len(list_filter(string_split(lower(trim(text)), ' '),
-                                 x -> x IN ('và','của','là','các','cho')))
-                      > len(list_filter(string_split(lower(trim(text)), ' '),
-                                 x -> x IN ('the','a','of','and','is'))) THEN 'vi'
-                        ELSE 'unknown' END AS lang_pred,
-                   CAST(FLOOR(500000.0 * len(list_filter(string_split(trim(text), ' '),
-                                 x -> lower(x) IN ('the','a','of','and','is')))
-                              / GREATEST(len(string_split(trim(text), ' ')), 1))
-                      + FLOOR(300000.0 * (LENGTH(text)
-                              - (LENGTH(text) - LENGTH(regexp_replace(text, '[.,!?;:]', '', 'g'))))
-                              / GREATEST(LENGTH(text), 1))
-                      + LEAST(400 * LENGTH(text), 200000) AS BIGINT) AS quality_ppm,
-                   CAST(len(string_split(trim(text), ' ')) AS BIGINT) AS n_tokens,
-                   md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fp
-            FROM documents WHERE doc_id < 500
+        WITH RECURSIVE
+        docs AS (
+            SELECT doc_id, text FROM documents WHERE doc_id < 500
+            UNION ALL
+            SELECT doc_id + 1000000, text FROM documents
+            WHERE doc_id < 500 AND doc_id % 10 = 0
         ),
-        passed AS (SELECT * FROM ann WHERE quality_ppm >= 450000),
+        {_annotate_ctes("docs")},
+        passed AS (
+            SELECT *, md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fp
+            FROM ann WHERE quality_ppm >= 450000
+        ),
         kept AS (
             SELECT * FROM passed
             QUALIFY doc_id = MIN(doc_id) OVER (PARTITION BY fp)
-        )
+        ),
+        {_closure_ctes(_mh_pairs_sql('kept'))}
         SELECT CAST(doc_id AS BIGINT) AS doc_id, lang_pred, quality_ppm, n_tokens
         FROM kept
-        WHERE doc_id NOT IN (
-            SELECT id FROM ({d['q51_dedup_clusters']}) WHERE id <> component
-        )
+        WHERE doc_id NOT IN (SELECT id FROM reach GROUP BY id HAVING MIN(n) <> id)
     """
     return d

@@ -1,5 +1,5 @@
-"""The composed LLM-training-data pipeline as one reusable plan — the q52
-driver query and the BENCH_NOTES 100k-doc throughput run both call this.
+"""The composed LLM-training-data pipeline as one reusable plan — the
+DuckDB-oracled q52, entry(), bench.py and scripts/run_training.py call this.
 
 Stage order (each an already-oracled operator, all groupBy/band-join shapes
 — no full-corpus windows, no cartesians):
@@ -10,11 +10,11 @@ Stage order (each an already-oracled operator, all groupBy/band-join shapes
 3. exact dedup: keep the min-doc_id ROW per normalized-text fingerprint
    (ONE ``min_by``-struct aggregation — one shuffle of the gated corpus,
    where the groupBy + left-semi-join shape shuffles it twice);
-4. near-dup canonical (optional): MinHash-LSH STAR edges (bucket-min →
-   member: same transitive closure as the full per-bucket clique at
-   O(members) instead of O(members²) edges — see
-   simdedup.minhash_lsh_star_edges) → large-star/small-star connected
-   components → keep component roots.
+4. near-dup canonical (optional): MinHash-LSH STAR edges over 8 hashes
+   in 2-row bands (bucket-min → member: same transitive closure as the
+   full per-bucket clique at O(members) instead of O(members²) edges —
+   see simdedup.minhash_lsh_star_edges) → large-star/small-star
+   connected components → keep component roots.
 
 At 100 TB every stage partitions by its own key (fp, band key, component
 id) and the only iteration is CC's O(log²)-round loop (2 star rounds per
@@ -28,8 +28,7 @@ __all__ = ["training_pipeline"]
 
 
 def training_pipeline(docs: DataFrame, quality_min: int = 450000,
-                      near_dedup: bool = True, n_hashes: int = 8,
-                      band_rows: int = 2,
+                      near_dedup: bool = True,
                       id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """documents(id, text, ...) → surviving annotated docs
     (id, lang_pred, quality_ppm, n_tokens + original columns).
@@ -39,8 +38,8 @@ def training_pipeline(docs: DataFrame, quality_min: int = 450000,
     lifetime — the returned DataFrame carries the handle as
     ``.training_persist_handle``; call ``.unpersist()`` on it after the
     result is materialized, or repeated pipeline runs in one app pin a
-    stale corpus copy each (the scaling bench does exactly this between
-    levels)."""
+    stale corpus copy each (bench.py and perfbench unpersist after each
+    timed run)."""
     from pcrawler_spark.operators.concomp import connected_components
     from pcrawler_spark.operators.simdedup import minhash_lsh_star_edges
     from pcrawler_spark.operators.textstats import (
@@ -76,7 +75,7 @@ def training_pipeline(docs: DataFrame, quality_min: int = 450000,
     # (r7: 5.6 -> 4.7 s on the 194k-doc corpus)
     pairs = minhash_lsh_star_edges(
         kept.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")),
-        n_hashes=n_hashes, band_rows=band_rows, pre_repartition=False,
+        n_hashes=8, band_rows=2, pre_repartition=False,
     )
     comp = connected_components(pairs, src="doc_a", dst="doc_b")
     noncanon = comp.filter(F.col("id") != F.col("component")).select(

@@ -161,6 +161,14 @@ BRANCH_MUTATIONS = [
     ("q50_roundtrip_family", "warc date derivation",
      "lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0')",
      "lpad(CAST(doc_id % 27 + 1 AS VARCHAR), 2, '0')"),
+    # not a merge but a staged pipeline (training_pipeline): each dedup
+    # stage's SQL must move the output, or the oracle would certify the
+    # product with that stage missing.  The injected exact dups pin the
+    # fingerprint keep-min; the full band key pins the near-dup closure.
+    ("q52_training_pipeline", "exact dedup keep-min",
+     "MIN(doc_id) OVER (PARTITION BY fp)", "MAX(doc_id) OVER (PARTITION BY fp)"),
+    ("q52_training_pipeline", "near-dup band key",
+     "USING (band, mh_0, mh_1)", "USING (band, mh_0)"),
 ]
 
 
@@ -191,6 +199,7 @@ def test_every_merged_query_has_mutations():
         "q43_near_pair_family", "q61_repeated_spans",
         "q39_sanitize_pii_family", "q46_crawl_policy_family",
         "q50_roundtrip_family", "q44_lexical_family",
+        "q52_training_pipeline",
     }
 
 
