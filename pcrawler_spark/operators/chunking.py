@@ -2,12 +2,14 @@
 deterministic sequence packing — the step between the dedup pipeline
 (plans/training.py) and an LLM data loader.
 
-Both operators are pure JVM expressions (split/slice/window — no UDFs) and
+Both operators are pure JVM expressions (regex/split/window — no UDFs) and
 SQL-replayable, so they carry full DuckDB oracles (q55/q56)."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
+
+from .textstats import words
 
 __all__ = ["token_chunks", "pack_sequences"]
 
@@ -21,26 +23,21 @@ def token_chunks(docs: DataFrame, chunk_size: int = 64,
     token, mirroring SQL ``string_split`` semantics so the oracle agrees.
 
     Scale shape: one projection + posexplode — embarrassingly parallel, no
-    shuffle at all.  The split is materialized as a column before the
-    window slide (r7): an inline alias is re-inlined into the transform
-    lambda and re-evaluated per element — O(tokens²) per doc."""
-    toks = F.col("_w")
-    n_chunks = F.ceil(F.size(toks) / F.lit(float(chunk_size))).cast("int")
-    windows = F.transform(
-        F.sequence(F.lit(0), n_chunks - 1),
-        lambda i: F.slice(toks, i * chunk_size + 1, chunk_size),
-    )
+    shuffle at all.  Each chunk is one match of a compiled regex: a word
+    start (text start or consumed space) and up to ``chunk_size - 1``
+    space-led words after it."""
+    chunks = F.regexp_extract_all(
+        F.trim(F.col(text_col)),
+        F.lit(r"(?:^| )([^ ]*(?: [^ ]*){0,%d})" % (chunk_size - 1)), 1)
     return docs.select(
         F.col(id_col).cast("long").alias(id_col),
-        F.split(F.trim(F.col(text_col)), " ").alias("_w"),
-    ).select(
-        id_col,
-        F.posexplode(windows).alias("chunk_id", "_ctoks"),
+        F.posexplode(chunks).alias("chunk_id", "chunk_text"),
     ).select(
         id_col,
         F.col("chunk_id").cast("long").alias("chunk_id"),
-        F.array_join("_ctoks", " ").alias("chunk_text"),
-        F.size("_ctoks").cast("long").alias("n_chunk_tokens"),
+        "chunk_text",
+        (F.regexp_count("chunk_text", F.lit(" ")) + 1).cast("long")
+        .alias("n_chunk_tokens"),
     )
 
 
@@ -56,7 +53,7 @@ def pack_sequences(docs: DataFrame, budget: int = 512, n_shards: int = 8,
     Scale shape: ONE window over (shard) — the sort is per-shard, so
     parallelism = n_shards and no global sort exists; pick n_shards ≈
     cluster cores.  Returns (id, shard, n_tokens, bin)."""
-    n_tokens = F.size(F.split(F.trim(F.col(text_col)), " ")).cast("long")
+    n_tokens = F.size(words(F.col(text_col))).cast("long")
     d = docs.select(
         F.col(id_col).cast("long").alias(id_col),
         n_tokens.alias("n_tokens"),

@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
 from .simdedup import _h32
+from .textstats import words
 
 
 def token_budget_mix(df: DataFrame, budgets: dict, id_col: str = "doc_id",
@@ -73,8 +74,7 @@ def token_budget_mix(df: DataFrame, budgets: dict, id_col: str = "doc_id",
     rows = df.select(
         F.col(id_col).alias("id"),
         F.col(stratum_col).alias("stratum"),
-        F.size(F.split(F.trim(F.col(text_col)), " ")).cast("long")
-         .alias("n_tokens"),
+        F.size(words(F.col(text_col))).cast("long").alias("n_tokens"),
         _h32(F.col(id_col).cast("string")).alias("h"),
     ).filter(F.col("stratum").isin(list(budgets))).withColumn(
         "bucket", F.shiftright(F.col("h"), shift))

@@ -34,6 +34,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .textstats import words
+
 
 def bm25_topk(docs: DataFrame, terms: Sequence[str], k: int = 20,
               k1: float = 1.5, b: float = 0.75,
@@ -44,7 +46,7 @@ def bm25_topk(docs: DataFrame, terms: Sequence[str], k: int = 20,
     An empty corpus gives an empty result with the same schema."""
     toks = docs.select(
         F.col(id_col).alias("_id"),
-        F.explode(F.split(F.trim(F.col(text_col)), " ")).alias("tok"),
+        F.explode(words(F.col(text_col))).alias("tok"),
     )
     dl = toks.groupBy("_id").agg(F.count(F.lit(1)).alias("dl"))
     stats = dl.agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("tot")).collect()[0]

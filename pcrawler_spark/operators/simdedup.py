@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .textstats import fingerprint
+from .textstats import fingerprint, full_word_ngrams, word_ngrams, words
 
 
 def _h32(col):
@@ -41,30 +41,10 @@ def exact_duplicates(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     )
 
 
-def _shingles_of(words, n: int = 3):
-    """Distinct n-gram shingles from a PRE-MATERIALIZED token-array column.
-
-    The tokens MUST be a real column, not an inline ``split()`` alias:
-    Catalyst inlines single-use aliases into the ``transform`` lambda and
-    re-evaluates the split per element — O(tokens²) per doc (the winnowing
-    kernel documents the same trap; measured 3.1× on the k-gram pass at
-    sf0.1).  Callers project ``split(trim(text), ' ')`` into a column first
-    (``_with_words``)."""
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.size(words) - (n - 1), F.lit(1))),
-            lambda i: F.concat_ws(" ", F.slice(words, i, n)),
-        )
-    )
-
-
-def _with_words(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(doc, _w): the whitespace token array as a materialized column —
-    the split runs once per row (see :func:`_shingles_of`)."""
-    return df.select(
-        F.col(id_col).alias("doc"),
-        F.split(F.trim(F.col(text_col)), " ").alias("_w"),
-    )
+def _shingles_of(text, n: int = 3):
+    """Distinct word ``n``-gram shingles of a text column (``[]`` for null
+    text)."""
+    return F.array_distinct(word_ngrams(text, n))
 
 
 def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.5,
@@ -85,8 +65,8 @@ def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.5,
     sizes stay full-set, so capped pairs can only under-estimate Jaccard
     (standard recall/cost trade, never a false positive).
     """
-    sh = _with_words(df, id_col, text_col).select(
-        "doc", _shingles_of(F.col("_w"), n).alias("sh"))
+    sh = df.select(F.col(id_col).alias("doc"),
+                   _shingles_of(F.col(text_col), n).alias("sh"))
     sizes = sh.select("doc", F.size("sh").alias("n_sh"))
     inv = sh.select("doc", F.explode("sh").alias("shingle"))
     if max_shingle_df is not None:
@@ -157,8 +137,7 @@ def _minhash_wide(df: DataFrame, n_hashes: int, id_col: str, text_col: str,
         # doc training corpus (r7).
         sh = sh.repartition(n_part, "doc")
     sh = (
-        sh.select("doc", F.split(F.trim(F.col("_t")), " ").alias("_w"))
-        .select("doc", F.explode(_shingles_of(F.col("_w"), n)).alias("shingle"))
+        sh.select("doc", F.explode(_shingles_of(F.col("_t"), n)).alias("shingle"))
         .withColumn("h0", _h32(F.col("shingle")) % _MH_P)
     )
     aggs = []
@@ -268,7 +247,7 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     """32-bit SimHash: per token the portable hash votes ±1 on each bit."""
     toks = df.select(
         F.col(id_col).alias("doc"),
-        F.explode(F.array_distinct(F.split(F.trim(F.col(text_col)), " "))).alias("tok"),
+        F.explode(F.array_distinct(words(F.col(text_col)))).alias("tok"),
     ).withColumn("h", _h32(F.col("tok")))
     votes = [
         F.sum(
@@ -354,8 +333,8 @@ def repeated_ngram_spans(df: DataFrame, k: int = 4, min_count: int = 2,
     island absorbed.  pcrawler has no substring dedup; this is training-
     pipeline surface the 100 TB target needs (SURVEY §2 LLM-data ops).
 
-    Plan / scale: tokenize + slide the k-windows JVM-side (split /
-    transform / posexplode — no Python, no shuffle); count grams with ONE
+    Plan / scale: tokenize + slide the k-windows JVM-side (one compiled
+    regexp_extract_all + posexplode — no Python, no shuffle); count grams with ONE
     groupBy on the 64-bit gram hash — map-side partial agg means a
     boilerplate gram repeated 10^8 times ships one partial row per map
     task, never 10^8 rows to one reducer (the skew-safe shape a window
@@ -385,23 +364,13 @@ def repeated_ngram_spans(df: DataFrame, k: int = 4, min_count: int = 2,
 
 def _gram_hits(df: DataFrame, k: int, id_col: str, text_col: str) -> DataFrame:
     """(doc, pos, gh) for every k-token window — tokenize + slide + explode
-    entirely JVM-side (split / transform / posexplode; no Python, no
+    entirely JVM-side (one regexp_extract_all + posexplode; no Python, no
     shuffle); ``gh`` is the 64-bit xxhash of the gram text so downstream
-    shuffles/joins carry fixed-width keys, never the gram strings."""
-    # the split is projected into a real column first: an inline alias is
-    # re-inlined into the transform lambda by Catalyst and re-evaluated per
-    # element — O(tokens²) per doc (see _shingles_of; measured 3.1× here)
-    words = F.col("_w")
-    grams = F.when(
-        F.size(words) >= k,
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.size(words) - (k - 1), F.lit(1))),
-            lambda i: F.concat_ws(" ", F.slice(words, i, k)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return _with_words(df, id_col, text_col).select(
-        "doc",
-        F.posexplode(grams).alias("pos", "gram"),
+    shuffles/joins carry fixed-width keys, never the gram strings.  A doc
+    of fewer than k tokens has no window."""
+    return df.select(
+        F.col(id_col).alias("doc"),
+        F.posexplode(full_word_ngrams(F.col(text_col), k)).alias("pos", "gram"),
     ).select("doc", F.col("pos").cast("long").alias("pos"),
              F.xxhash64("gram").alias("gh"))
 

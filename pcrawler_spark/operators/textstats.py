@@ -15,18 +15,59 @@ the hot path) with exact ANSI-SQL equivalents for the DuckDB oracle:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # tiny deterministic stopword marker sets (heuristic lang-id)
 EN_MARKERS = ("the", "a", "of", "and", "is")
 VI_MARKERS = ("và", "của", "là", "các", "cho")
 
+# One tokenization for every text operator: the words of a text are the
+# space-trimmed text split on single spaces (runs of spaces give empty
+# words; tabs and newlines stay inside words).  The n-gram and marker
+# regexes find the same words without building the array: a word starts
+# at ``^`` or after a CONSUMED space (a lookbehind also fires between the
+# halves of a surrogate pair) and ends at ``(?![^ ])`` (``$`` also matches
+# before a trailing newline).  tests/test_text_parity.py is the reference.
+
+def words(text: Column) -> Column:
+    """The whitespace words of ``text``: ``split(trim(text), ' ')``."""
+    return F.split(F.trim(text), " ")
+
+
+def full_word_ngrams(text: Column, n: int) -> Column:
+    """Every ``n``-word window of ``text`` joined by single spaces, in word
+    order: one match per word start, whose lookahead captures that word and
+    the ``n - 1`` after it.  ``[]`` for a text of fewer than ``n`` words,
+    null for null text."""
+    return F.regexp_extract_all(
+        F.trim(text), F.lit(r"(?:^| )(?=([^ ]*(?: [^ ]*){%d}))" % (n - 1)), 1)
+
+
+def word_ngrams(text: Column, n: int) -> Column:
+    """:func:`full_word_ngrams`, except that a text of fewer than ``n``
+    words gives its one truncated gram (the trimmed text) and a null text
+    gives ``[]``.  The whole-text alternative can only match at the text
+    start (``^``) and only where the ``n``-word one failed there."""
+    grams = F.regexp_extract_all(
+        F.trim(text),
+        F.lit(r"(?:^| )(?=([^ ]*(?: [^ ]*){%d}|^(?s:.*)))" % (n - 1)), 1)
+    return F.coalesce(grams, F.array().cast("array<string>"))
+
+
+def _marker_pattern(markers) -> str:
+    """Regex matching each whole word of a lowercased text that is one of
+    ``markers``; group 1 is the marker."""
+    return r"(?:^| )(%s)(?![^ ])" % "|".join(markers)
+
+
+def marker_count(text: Column, markers) -> Column:
+    """How many words of ``text``, lowercased, are one of ``markers``."""
+    return F.regexp_count(F.lower(F.trim(text)), F.lit(_marker_pattern(markers)))
+
 
 def token_count(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return df.withColumn(
-        "n_tokens", F.size(F.split(F.trim(F.col(text_col)), " ")).cast("long")
-    )
+    return df.withColumn("n_tokens", F.size(words(F.col(text_col))).cast("long"))
 
 
 def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -44,9 +85,8 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     text = F.col(text_col)
     n_chars = F.length(text)
     n_punct = n_chars - F.length(F.regexp_replace(text, r"[.,!?;:]", ""))
-    toks = F.split(F.trim(text), " ")
-    n_tokens = F.size(toks)
-    n_stop = F.size(F.filter(toks, lambda t: F.lower(t).isin(*EN_MARKERS)))
+    n_tokens = F.size(words(text))
+    n_stop = marker_count(text, EN_MARKERS)
     c = F.greatest(n_chars, F.lit(1))
     t = F.greatest(n_tokens, F.lit(1))
     return (
@@ -66,9 +106,8 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Marker-vocabulary language guess: en vs vi vs unknown."""
-    toks = F.split(F.lower(F.trim(F.col(text_col))), " ")
-    en = F.size(F.filter(toks, lambda t: t.isin(*EN_MARKERS)))
-    vi = F.size(F.filter(toks, lambda t: t.isin(*VI_MARKERS)))
+    en = marker_count(F.col(text_col), EN_MARKERS)
+    vi = marker_count(F.col(text_col), VI_MARKERS)
     return df.withColumn(
         "lang_pred",
         F.when(en > vi, "en").when(vi > en, "vi").otherwise("unknown"),
@@ -189,7 +228,7 @@ def token_logfreq_score(df: DataFrame, id_col: str = "doc_id",
     common vocabulary."""
     toks = df.select(
         F.col(id_col).alias("_id"),
-        F.explode(F.split(F.trim(F.col(text_col)), " ")).alias("tok"),
+        F.explode(words(F.col(text_col))).alias("tok"),
     )
     tf = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("tf"))
     total = toks.count()  # one bounded action: the corpus token count
@@ -217,22 +256,10 @@ def repetition_ratio(df: DataFrame, n: int = 3, id_col: str = "doc_id",
     counts, so it is exactly engine-portable.  Returns
     (id, n_shingles, dup_ratio_ppm)."""
     # NOT _shingles_of(): that one array_distincts for the dedup joins — the
-    # repetition ratio needs RAW shingle counts.  The split is materialized
-    # as a column first (r7): an inline alias is re-inlined into the
-    # transform lambda and re-evaluated per element — O(tokens²) per doc
-    # (same trap the winnowing kernel documents).
-    words = F.col("_w")
+    # repetition ratio needs RAW shingle counts
     raw = df.select(
         F.col(id_col).alias("_id"),
-        F.split(F.trim(F.col(text_col)), " ").alias("_w"),
-    ).select(
-        "_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.greatest(F.size(words) - (n - 1), F.lit(1))),
-                lambda i: F.concat_ws(" ", F.slice(words, i, n)),
-            )
-        ).alias("s"),
+        F.explode(word_ngrams(F.col(text_col), n)).alias("s"),
     )
     agg = raw.groupBy("_id").agg(
         F.count(F.lit(1)).alias("n_shingles"),
@@ -283,24 +310,15 @@ def gopher_repetition_signals(df: DataFrame, top_n: int = 2, dup_n: int = 5,
 
     Returns (id, n_chars, top{n}gram_char_ppm, dup{n}gram_char_ppm).
     """
-    words = F.split(F.trim(F.col(text_col)), " ")
     base = df.select(
         F.col(id_col).alias("_id"),
         F.length(F.trim(F.col(text_col))).alias("n_chars"),
-        words.alias("w"),
+        F.col(text_col).alias("_t"),
     )
 
     def grams(n: int):
         return base.select(
-            "_id",
-            "n_chars",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.greatest(F.size("w") - (n - 1), F.lit(1))),
-                    lambda i: F.concat_ws(" ", F.slice(F.col("w"), i, n)),
-                )
-            ).alias("s"),
-        )
+            "_id", "n_chars", F.explode(word_ngrams(F.col("_t"), n)).alias("s"))
 
     # top gram: per-(doc, gram) counts → per-doc max count → min gram among
     # the maxima (deterministic tie-break) → char coverage
@@ -371,27 +389,25 @@ def gopher_quality_gate(df: DataFrame, min_words: int = 50,
     ``fail_reasons`` (comma-joined rule names, '' = clean) and ``passed``.
     """
     text = F.trim(F.col(text_col))
-    words = F.split(text, " ")
-    n_words = F.size(words)
-    sum_len = F.aggregate(words, F.lit(0), lambda acc, w: acc + F.length(w))
+    n_words = F.size(words(F.col(text_col)))
+    # the words of the trimmed text are separated by n_words - 1 spaces
+    sum_len = F.length(text) - (n_words - 1)
     mean_len_ppm = F.floor(
         F.lit(1_000_000.0) * sum_len / F.greatest(n_words, F.lit(1))
     ).cast("long")
+    # one match per word holding an ASCII letter
+    n_alpha = F.regexp_count(text, F.lit(r"(?:^| )[^ A-Za-z]*[A-Za-z]"))
     alpha_ppm = F.floor(
-        F.lit(1_000_000.0)
-        * F.size(F.filter(words, lambda w: w.rlike("[A-Za-z]")))
-        / F.greatest(n_words, F.lit(1))
+        F.lit(1_000_000.0) * n_alpha / F.greatest(n_words, F.lit(1))
     ).cast("long")
     n_symbols = (F.length(text)
                  - F.length(F.regexp_replace(text, r"[#…]", "")))
     symbol_ppm = F.floor(
         F.lit(1_000_000.0) * n_symbols / F.greatest(n_words, F.lit(1))
     ).cast("long")
-    markers = EN_MARKERS + VI_MARKERS
-    stop_hits = F.size(F.array_distinct(
-        F.filter(F.transform(words, F.lower),
-                 lambda w: w.isin(*markers))
-    )).cast("long")
+    stop_hits = F.size(F.array_distinct(F.regexp_extract_all(
+        F.lower(text), F.lit(_marker_pattern(EN_MARKERS + VI_MARKERS)), 1,
+    ))).cast("long")
 
     out = (
         df.withColumn("n_words", n_words.cast("long"))

@@ -318,3 +318,28 @@ def test_bm25_plan_topk_and_term_filter_first(spark):
     assert plan.count("spark") >= 1 and "tok" in plan
     for py in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "MapInArrow"):
         assert py not in plan
+
+
+def test_text_operators_have_no_interpreted_lambdas(spark):
+    """Words, n-grams, marker counts and chunks are compiled expressions
+    (split / regexp_extract_all / regexp_count): no higher-order
+    ``transform``/``filter``/``aggregate`` lambda, which Spark interprets
+    per array element outside whole-stage codegen."""
+    from pcrawler_spark.operators.chunking import token_chunks
+    from pcrawler_spark.operators.simdedup import repeated_ngram_spans
+    from pcrawler_spark.operators.textstats import (
+        gopher_repetition_signals, repetition_ratio)
+    from pcrawler_spark.plans.training import training_pipeline
+
+    d = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    train = training_pipeline(d, quality_min=450000)
+    plans = {
+        "training_pipeline": plan_of(train),
+        "repetition_ratio": plan_of(repetition_ratio(d)),
+        "gopher_repetition_signals": plan_of(gopher_repetition_signals(d)),
+        "repeated_ngram_spans": plan_of(repeated_ngram_spans(d)),
+        "token_chunks": plan_of(token_chunks(d)),
+    }
+    train.training_persist_handle.unpersist()
+    for name, plan in plans.items():
+        assert "lambdafunction" not in plan, name

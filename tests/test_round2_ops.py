@@ -1,5 +1,6 @@
 """Round-2 operator tests: SimHash exact-recall banding, Jaccard hot-shingle
-cap, the F5 html-length gate, and the X11 error-URL heuristic."""
+cap and null-text shingles, the F5 html-length gate, and the X11 error-URL
+heuristic."""
 
 import contextlib
 import io
@@ -8,6 +9,7 @@ import itertools
 from pyspark.sql import functions as F
 
 from pcrawler_spark.operators.simdedup import (
+    minhash_lsh_candidates,
     ngram_jaccard_pairs,
     simhash,
     simhash_blocks,
@@ -81,6 +83,16 @@ def test_ngram_jaccard_hot_shingle_cap(spark):
     assert uncapped.count() == 15  # all C(6,2) pairs share 'alpha beta gamma'
     capped = ngram_jaccard_pairs(df, threshold=0.01, max_shingle_df=3)
     assert capped.count() == 0  # the only common shingle has df=6 > 3
+
+
+def test_null_text_is_no_near_duplicate(spark):
+    """A null text has no shingle, so it pairs with neither another null
+    text nor ''.  Given the shingle '', these three docs would come out
+    as three Jaccard-1.0 pairs and three LSH candidates."""
+    df = spark.createDataFrame([(1, None), (2, None), (3, "")],
+                               "doc_id long, text string")
+    assert ngram_jaccard_pairs(df).count() == 0
+    assert minhash_lsh_candidates(df).count() == 0
 
 
 def test_html_length_gate_excludes_tiny_pages(spark):
